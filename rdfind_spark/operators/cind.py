@@ -16,8 +16,10 @@ Scale notes (100 TB posture): the only shuffles are the distinct, the
 per-capture count, and the join_value self-join; frequency pruning runs
 *before* the quadratic pair stage, which is what bounds group sizes (the
 reference fights the same blow-up with Bloom filters + custom
-rebalancing, ``programs/RDFind.scala:404-444``).  AQE skew-join handles
-residual hub values; `salt` splitting is available for extreme hubs.
+rebalancing, ``programs/RDFind.scala:404-444``).  Hub join lines go
+through the one hot-line kernel below (``hot_line_census``,
+``hot_line_masks``, ``hot_line_overlap``, ``cold_line_join``), which the
+staged engine shares.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import functions as F
 
 from rdfind_spark import condition_codes as cc
 from rdfind_spark.operators.captures import capture_candidates
-from rdfind_spark.util import materialize
+from rdfind_spark.util import materialize, salted_join
 
 CAPTURE_KEY = ["code", "v1", "v2"]
 
@@ -48,9 +50,11 @@ N_SALT = 32
 # driver-collected tuple, so a pathological hub distribution (tens of
 # thousands of hot lines) would mean hundreds of mask columns and an
 # unbounded collect.  Beyond the cap, only the MAX_HOT_MASK *hottest*
-# lines get masks; the overflow lines stay exact through the salted
-# triangle join (graceful degradation, no driver blow-up).
+# lines get masks; the overflow lines stay exact through salted joins
+# (graceful degradation, no driver blow-up).
 MAX_HOT_MASK = 4096
+
+JV = ["jv1", "jv2"]
 
 
 def _pair_parallelism(df: DataFrame) -> int:
@@ -206,6 +210,141 @@ def _apply_sketch_filter(pairs: DataFrame, sketches: DataFrame) -> DataFrame:
     )
 
 
+# ---- the hot-line kernel: the one hub-line mechanism of both CIND
+# engines (the reference's join-line rebalancing,
+# ``operators/AssignJoinLineRebalancing.scala:15-65``).  A join line is
+# hot when more than HOT_LINE_K frequent captures share it.  The
+# MAX_HOT_MASK hottest hot lines are named on the driver and encoded as
+# per-capture 64-bit membership masks, so a pair's hot-line overlap is
+# a popcount instead of a k² join; hot lines past the cap (the
+# overflow) are never collected and stay exact through salted joins.
+
+
+def hot_line_census(capf: DataFrame) -> tuple[list, DataFrame | None]:
+    """The hot lines of ``capf`` as ``(hot_values, overflow)``.
+
+    ``hot_values``: the (jv1, jv2) keys of at most MAX_HOT_MASK hot
+    lines, hottest first with a key tie-break, so reruns mask the same
+    lines — a bounded driver collect.  ``overflow``: a lazy frame of the
+    remaining hot lines' keys when the cap is reached, else None."""
+    hot_sizes = (
+        capf.groupBy(*JV)
+        .agg(F.count("*").alias("line_k"))
+        .filter(F.col("line_k") > HOT_LINE_K)
+    )
+    hot_values = [
+        (r.jv1, r.jv2)
+        for r in hot_sizes.orderBy(F.col("line_k").desc(), *JV)
+        .limit(MAX_HOT_MASK)
+        .select(*JV)
+        .collect()
+    ]
+    if len(hot_values) < MAX_HOT_MASK:
+        return hot_values, None
+    overflow = hot_sizes.select(*JV).join(
+        F.broadcast(_hot_keys(capf, hot_values)), on=JV, how="left_anti"
+    )
+    return hot_values, overflow
+
+
+def _hot_index(df: DataFrame, hot_values: list) -> DataFrame:
+    """(jv1, jv2, idx): each named hot line with its mask bit index."""
+    return df.sparkSession.createDataFrame(
+        [(a, b, i) for i, (a, b) in enumerate(hot_values)],
+        "jv1 long, jv2 int, idx int",
+    )
+
+
+def _hot_keys(df: DataFrame, hot_values: list) -> DataFrame:
+    return _hot_index(df, hot_values).select(*JV)
+
+
+def _mask_words(hot_values: list) -> int:
+    return (len(hot_values) + 63) // 64
+
+
+def hot_line_masks(capf: DataFrame, hot_values: list) -> DataFrame:
+    """Per-capture membership bitmask over ``hot_values`` (lazy): one
+    row ``(h1, h2, m0, m1, ...)`` per capture on a hot line, bit
+    ``i % 64`` of word ``m{i // 64}`` set when the capture occurs on hot
+    line ``i``.  Sized by the summed hot line widths, so broadcastable;
+    callers materialize it once for all of its consumers."""
+    bit = F.expr("shiftleft(CAST(1 AS BIGINT), idx % 64)")
+    return (
+        capf.join(F.broadcast(_hot_index(capf, hot_values)), on=JV)
+        .groupBy("h1", "h2")
+        .agg(
+            *[
+                F.bit_or(
+                    F.when(F.floor(F.col("idx") / 64) == c, bit).otherwise(F.lit(0))
+                ).alias(f"m{c}")
+                for c in range(_mask_words(hot_values))
+            ]
+        )
+    )
+
+
+def masks_as(masks: DataFrame, side: str) -> DataFrame:
+    """The mask table keyed as one side of a pair: every column renamed
+    to ``{side}_h1``, ``{side}_h2``, ``{side}_m{c}``."""
+    return masks.select(*[F.col(c).alias(f"{side}_{c}") for c in masks.columns])
+
+
+def _popcount(words) -> Column:
+    return reduce(lambda x, y: x + y, [F.bit_count(w) for w in words])
+
+
+def hot_line_overlap(a: str, b: str, hot_values: list) -> Column:
+    """Number of hot lines the pair's two ``masks_as`` sides share: the
+    popcount of their mask AND.  A side left-joined without a mask row
+    is on no hot line."""
+    return _popcount(
+        F.coalesce(F.col(f"{a}_m{c}"), F.lit(0)).bitwiseAND(
+            F.coalesce(F.col(f"{b}_m{c}"), F.lit(0))
+        )
+        for c in range(_mask_words(hot_values))
+    )
+
+
+def line_product_is_safe(n_a: int, n_b: int) -> bool:
+    """The verify hub gate: a join between ``n_a`` distinct captures on
+    one side and ``n_b`` on the other pairs at most ``n_a × n_b`` rows
+    on any line, so when that stays within HOT_LINE_K² no line can melt
+    a task and the plain join is safe."""
+    return n_a * n_b <= HOT_LINE_K * HOT_LINE_K
+
+
+def cold_line_join(
+    a: DataFrame,
+    b: DataFrame,
+    hot_values: list,
+    overflow: DataFrame | None,
+) -> DataFrame:
+    """Bipartite equi-join of two capture-instance sides on the join
+    value, over cold lines only: the masked ``hot_values`` lines are
+    left out (their share is ``hot_line_overlap``), and the ``overflow``
+    lines go through ``util.salted_join`` — ``a`` rows salted, ``b``
+    rows replicated N_SALT ways — so their k_a × k_b product spreads
+    over N_SALT join keys instead of one task.  Per-line counts add, so
+    the union of the two streams is exact."""
+    hot = F.broadcast(_hot_keys(a, hot_values))
+    a = a.join(hot, on=JV, how="left_anti")
+    b = b.join(hot, on=JV, how="left_anti")
+    if overflow is None:
+        return a.join(b, on=JV)
+    ovf = F.broadcast(overflow.select(*JV))
+    narrow = a.join(ovf, on=JV, how="left_anti").join(
+        b.join(ovf, on=JV, how="left_anti"), on=JV
+    )
+    wide = salted_join(
+        a.join(ovf, on=JV, how="left_semi"),
+        b.join(ovf, on=JV, how="left_semi"),
+        on=JV,
+        salt=N_SALT,
+    )
+    return narrow.unionByName(wide)
+
+
 def capture_overlaps(
     capf: DataFrame,
     frequent: DataFrame,
@@ -240,14 +379,14 @@ def capture_overlaps(
     key are tiny, the blow-up is in join output).  This is the problem
     the reference's whole rebalancing subsystem exists for
     (``operators/AssignJoinLineRebalancing.scala:15-65``).  Mitigation,
-    chosen at runtime (this makes the function *eager*: it runs a small
-    census job over capf to find hot lines):
+    chosen at runtime (this makes the function *eager*: it runs the
+    small ``hot_line_census`` job over capf to find hot lines):
 
     * With hot lines present, the bitmask decomposition (exact in EVERY
       regime, see ``_cold_pair_counts_with_hot_masks``): pairs are
       counted over cold lines only, each pair's exact hot-line
       contribution is added back from broadcast per-capture *bitmasks*
-      (``bit_count(a & b)``), and the rare pairs living exclusively in
+      (``hot_line_overlap``), and the rare pairs living exclusively in
       hot lines are recovered from the tiny set of captures present in
       >= min_overlap distinct hot lines — the hub k² explosion is never
       materialized (measured 7× at a 2× scale probe vs falling back to
@@ -267,37 +406,10 @@ def capture_overlaps(
     paths.
     """
     if hot_values is None:
-        hot_sizes = (
-            capf.groupBy("jv1", "jv2")
-            .agg(F.count("*").alias("line_k"))
-            .filter(F.col("line_k") > HOT_LINE_K)
-        )
-        # Bounded collect: only the MAX_HOT_MASK hottest lines come to
-        # the driver (deterministic tie-break so reruns mask the same
-        # lines).
-        hot_values = [
-            (r.jv1, r.jv2)
-            for r in hot_sizes.orderBy(
-                F.col("line_k").desc(), "jv1", "jv2"
-            )
-            .limit(MAX_HOT_MASK)
-            .select("jv1", "jv2")
-            .collect()
-        ]
-        if len(hot_values) == MAX_HOT_MASK:
-            # possibly more hot lines than the cap — the remainder is
-            # handled exactly by the salted join, never materialized on
-            # the driver or as mask columns
-            top_df = capf.sparkSession.createDataFrame(
-                hot_values, "jv1 long, jv2 int"
-            )
-            hot_overflow = hot_sizes.select("jv1", "jv2").join(
-                F.broadcast(top_df), on=["jv1", "jv2"], how="left_anti"
-            )
-    overflow = hot_overflow
+        hot_values, hot_overflow = hot_line_census(capf)
     if hot_values:
         ov = _cold_pair_counts_with_hot_masks(
-            capf, hot_values, min_overlap, sketches, overflow=overflow
+            capf, hot_values, min_overlap, sketches, overflow=hot_overflow
         )
     else:
         # no hot lines at all — every line is narrow, pairs come from
@@ -338,42 +450,17 @@ def _cold_pair_counts_with_hot_masks(
     keeps the hub k² unmaterialized even when hot lines outnumber
     min_overlap (where the old gate fell back to the salted join over
     everything: measured 22× slower at a 2× scale probe)."""
-    spark = capf.sparkSession
     n_hot = len(hot_values)
-    n_chunks = (n_hot + 63) // 64
-    hot_df = spark.createDataFrame(
-        [(a, b, i) for i, (a, b) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
-    )
-    # per-capture membership bitmask over the hot lines, chunked into
-    # 64-bit words; capture-count-sized (sum of hot line widths)
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), idx % 64)")
-    masks = (
-        capf.join(F.broadcast(hot_df), on=["jv1", "jv2"])
-        .groupBy("h1", "h2")
-        .agg(
-            *[
-                F.bit_or(
-                    F.when(F.floor(F.col("idx") / 64) == c, bit).otherwise(F.lit(0))
-                ).alias(f"m{c}")
-                for c in range(n_chunks)
-            ]
-        )
-    )
-    # masks feeds THREE consumers (the ma/mb broadcasts and the deep
-    # popcount probe) whose plans differ only in aliases — too different
-    # for Spark's exchange reuse, so without pinning it the
+    # masks feeds THREE consumers (the two side-renamed broadcasts and
+    # the deep popcount probe) whose plans differ only in aliases — too
+    # different for Spark's exchange reuse, so without pinning it the
     # hot-membership aggregate re-scans capf once per consumer (r11
     # stage profile: two extra full capf scans per query).  It is
     # broadcast-sized by construction (only hot-line captures), so the
     # checkpoint is cheap.
-    masks = materialize(masks)
-    cold = capf.join(
-        F.broadcast(hot_df.select("jv1", "jv2")),
-        on=["jv1", "jv2"],
-        how="left_anti",
-    )
-    n_pair = _pair_parallelism(capf)
+    masks = materialize(hot_line_masks(capf, hot_values))
+    hot_keys = F.broadcast(_hot_keys(capf, hot_values))
+    cold = capf.join(hot_keys, on=JV, how="left_anti")
     pkey = ["a_h1", "a_h2", "b_h1", "b_h2"]
     cold_floor = max(1, min_overlap - n_hot)
     if overflow is not None:
@@ -391,36 +478,14 @@ def _cold_pair_counts_with_hot_masks(
         ov_cold = _grouped_pair_counts(
             cold, cold_floor, sketches
         ).withColumnRenamed("overlap", "cold_overlap")
-    ma = masks.select(
-        F.col("h1").alias("a_h1"),
-        F.col("h2").alias("a_h2"),
-        *[F.col(f"m{c}").alias(f"a_m{c}") for c in range(n_chunks)],
-    )
-    mb = masks.select(
-        F.col("h1").alias("b_h1"),
-        F.col("h2").alias("b_h2"),
-        *[F.col(f"m{c}").alias(f"b_m{c}") for c in range(n_chunks)],
-    )
-    with_masks = ov_cold.join(F.broadcast(ma), on=["a_h1", "a_h2"], how="left").join(
-        F.broadcast(mb), on=["b_h1", "b_h2"], how="left"
-    )
-    hot_common = reduce(
-        lambda x, y: x + y,
-        [
-            F.bit_count(
-                F.coalesce(F.col(f"a_m{c}"), F.lit(0)).bitwiseAND(
-                    F.coalesce(F.col(f"b_m{c}"), F.lit(0))
-                )
-            )
-            for c in range(n_chunks)
-        ],
-    )
+    with_masks = ov_cold.join(
+        F.broadcast(masks_as(masks, "a")), on=["a_h1", "a_h2"], how="left"
+    ).join(F.broadcast(masks_as(masks, "b")), on=["b_h1", "b_h2"], how="left")
     part1 = with_masks.select(
-        "a_h1",
-        "a_h2",
-        "b_h1",
-        "b_h2",
-        (F.col("cold_overlap") + hot_common).alias("overlap"),
+        *pkey,
+        (F.col("cold_overlap") + hot_line_overlap("a", "b", hot_values)).alias(
+            "overlap"
+        ),
     ).filter(F.col("overlap") >= min_overlap)
     if n_hot < min_overlap:
         # no pair can qualify on hot lines alone — part1 is complete
@@ -432,17 +497,13 @@ def _cold_pair_counts_with_hot_masks(
     # popcounts; their pairs are enumerated with the salted join over
     # hot-line rows only, then completed with targeted cold counts so
     # totals agree with part1 on any pair both sources emit.
-    popcnt = reduce(
-        lambda x, y: x + y,
-        [F.bit_count(F.col(f"m{c}")) for c in range(n_chunks)],
-    )
-    deep = masks.filter(popcnt >= min_overlap).select("h1", "h2")
-    deep = materialize(deep)
+    popcnt = _popcount(F.col(f"m{c}") for c in range(_mask_words(hot_values)))
+    deep = materialize(masks.filter(popcnt >= min_overlap).select("h1", "h2"))
     if deep.count() == 0:
         return part1
-    hot_rows = capf.join(
-        F.broadcast(hot_df.select("jv1", "jv2")), on=["jv1", "jv2"]
-    ).join(F.broadcast(deep), on=["h1", "h2"], how="left_semi")
+    hot_rows = capf.join(hot_keys, on=JV).join(
+        F.broadcast(deep), on=["h1", "h2"], how="left_semi"
+    )
     hp = _salted_pair_counts(hot_rows, hot_values, 1, sketches).select(
         *pkey, F.col("overlap").alias("hot_overlap")
     )
@@ -558,12 +619,11 @@ def _salted_pair_counts(
     capture_overlaps).  ``hot_values`` may be a driver-side list of
     (jv1, jv2) tuples or a DataFrame with those columns (the mask-cap
     overflow set, which is deliberately never collected)."""
-    spark = capf.sparkSession
     if isinstance(hot_values, DataFrame):
-        hot_df = hot_values.select("jv1", "jv2")
+        hot_df = hot_values.select(*JV)
     else:
-        hot_df = spark.createDataFrame(list(hot_values), "jv1 long, jv2 int")
-    hot = hot_df.select("jv1", "jv2", F.lit(True).alias("is_hot"))
+        hot_df = _hot_keys(capf, hot_values)
+    hot = hot_df.select(*JV, F.lit(True).alias("is_hot"))
     # Cell (i, j), i <= j, joins bucket-i captures (side A) with
     # bucket-j captures (side B): side A is replicated to cells (b,
     # b..N-1), side B to cells (0..b, b).  Off-diagonal cells produce

@@ -6,83 +6,70 @@ class to *generate candidates* for the next, so the expensive evidence
 collection only runs for captures that can still participate:
 
     1/1 overlaps → 1/1 CINDs + proper overlaps            (G2/A6/G16)
-    1/1 CINDs sharing a dep → 1/2 candidates              (G6)
+    1/1 CINDs sharing a dep (plus the dep's own
+        capture) → 1/2 candidates                         (G6)
     (1/1 CINDs ∪ proper overlaps) sharing a ref → 2/1
         candidates, provenance-tagged exact/inferred      (G7/G9)
-    1/2 ∪ exact-2/1 candidates → ONE evidence join        (G10/G11/A5)
-    (verified ∪ inferred) 2/1s sharing a dep → 2/2
-        candidates, pruned by 1/2 CINDs → verify          (G8/J7/G12)
+    support-pruned 2/1 candidates (exact ∪ inferred)
+        sharing a dep → 2/2 candidates                    (G8/G9)
+    1/2 ∪ exact-2/1 ∪ 2/2 candidates → ONE evidence join  (G10-G12/A5)
+    1/1 ∪ verified classes → minimality
 
-Here each "verify" is a relational evidence join *restricted by
-semi-joins to the candidate captures* — the Spark-native replacement for
-the reference's broadcast candidate Bloom filters (exact, no false
-positives; SURVEY §4).  The stage-1 pair join reuses the skew-hardened
-``capture_overlaps`` machinery from ``operators.cind``.
+Here "verify" is a relational evidence join *restricted by semi-joins
+to the candidate captures* — the Spark-native replacement for the
+reference's broadcast candidate Bloom filters (exact, no false
+positives; SURVEY §4).  Hub join lines are handled by the hot-line
+kernel of ``operators.cind``: one census of the capture table feeds
+both the stage-1 pair join (``capture_overlaps``) and the evidence
+join, which share one mask table.
 
 Equivalence contract: after the minimality pass, the staged result
 equals ``discover_cinds(minimal=True)`` — the reference implicitly
 relies on the same cross-strategy agreement (SURVEY §5).  Pre-
 minimality outputs can differ by result-set-bounded non-minimal rows
-(verified 2/1s whose dep generalization is a 1/1 CIND — admitted by
-the consolidated candidate merge below and killed by
+(verified 2/1s whose dep generalization is a 1/1 CIND, and 2/2s a 1/2
+CIND implies — admitted by the candidate merges below and killed by
 ``remove_implied_cinds``); the cross-strategy property tests pin the
 post-minimality agreement.
 
 Scale notes: candidate tables are result-sized (bounded by the CIND
 output, orders of magnitude below the data), so the semi-join
-restrictions broadcast; every evidence join is an equi-join on
+restrictions broadcast; the evidence join is an equi-join on
 ``join_value`` over the *restricted* capture tables — strictly smaller
 than the all-at-once pair join.  The one quadratic stage (1/1) runs on
 the shared hot-line/salting machinery.
 
-Cost structure vs the all-at-once plan (sf0.1, local[32],
-bench-condition stage wall clock — fresh process, sf0.001 JIT warmup,
-SPARK_GRAFT_STAGE_TIMING; this VM benches ±40% run-to-run, so figures
-are cross-run bands): shared prefix ~25-29s (dcap distinct 11s, freq
-groupBy 5s, frequent-string recovery + capf 13s concurrent — identical
-prefix to all-at-once; round 4 moved the string-recovery scan and the
-hot-mask build into BACKGROUND THREADS overlapping the census and the
-stage-1 pair join), unary pair join ~13-15s, 2/1 candidate merge ~11s,
-combined 1/2+2/1 evidence join ~10-14s, 2/2 evidence join ~3-10s,
-lattice/minimality remainder ~8s → measured full-query totals
-80.6-94.6s across same-day runs vs ~47s all-at-once (the spread IS the
-VM band).  Optimization history: 155s → 102s (three evidence joins →
-two; two quadratic merge joins → one provenance-tagged merge; hashed
-ref keys; 10 → 8 barriers) → ~90s (bipartite lower/higher-code
-merge enumeration generating ONLY valid-orientation pairs — 4.3B →
-sub-1B generated rows, see _merged_dep_candidates; one shared
-capture→hot-line mask table and freq_h-derived supports replacing
-per-call mask builds and distinct passes; overlap dedup moved onto
-fixed-width hash keys pre-restore) → ~80-95s band (round 4: exact
-support prunes on lattice candidates — merged ref must be frequent,
-ref_support >= dep_support — collapsing the 2/2 candidate class
-100,298 → 4 and the 1/2+2/1 class 324k → 127k at sf0.1; a hub-safety
-plain-join gate for small candidate sets; the background-thread
-overlaps above).  The residual ~1.7-1.9× gap vs
-all-at-once is structural, not slack: the lattice serializes
-candidate → verify rounds the all-at-once plan fuses into one pair
-join, and each round re-touches the instance table (two semi-join
-scans + one jv co-occurrence shuffle minimum).  The strategy remains
-the right tool in the regime the reference built it for —
-overlap-explosion inputs where all-at-once pair output (all arities
-at once) dwarfs the staged candidate classes — and for bounding
-plan/driver memory (each stage is checkpoint-truncated).
+Cost structure vs the all-at-once plan: both pay the same shared
+prefix (``build_capture_tables``) and hot-line census.  The staged plan
+then adds the 2/1 merge join, the 2/2 self-join and the evidence join,
+each behind a checkpoint barrier; those serial candidate → verify
+rounds, which the all-at-once plan fuses into one pair join, are why it
+is slower on benign inputs.  It is the right tool in the regime the
+reference built it for — overlap-explosion inputs where the
+all-at-once pair output (all arities at once) dwarfs the staged
+candidate classes — and for bounding plan/driver memory (each stage is
+checkpoint-truncated).  ``perfbench/run.py --workload tpch_staged
+--trace 1`` splits a discovery into these layers.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from rdfind_spark import condition_codes as cc
 from rdfind_spark.util import materialize
 from rdfind_spark.operators.cind import (
-    HOT_LINE_K,
-    MAX_HOT_MASK,
-    N_SALT,
+    JV,
     build_capture_tables,
     capture_overlaps,
+    cold_line_join,
+    hot_line_census,
+    hot_line_masks,
+    hot_line_overlap,
+    line_product_is_safe,
+    masks_as,
     remove_implied_cinds,
     structural_implies,
 )
@@ -97,7 +84,6 @@ def _materialize(df: DataFrame, label: str = "") -> DataFrame:
     inherently a sequence of materialized jobs in the reference too.
 
     Set ``SPARK_GRAFT_STAGE_TIMING=1`` to print per-stage wall clock."""
-    import os
     import time
 
     t0 = time.time()
@@ -130,44 +116,9 @@ _REF_H = ["ref_h1", "ref_h2"]
 _PAIR_H = _DEP_H + _REF_H
 
 
-def _hot_mask_table(capf: DataFrame, hot_values: list) -> DataFrame | None:
-    """Per-capture hot-line membership bitmask over the FULL capf table
-    (one 64-bit word column per 64 hot lines), checkpoint-truncated.
-
-    Mask values are a pure function of (capture, hot line set) — they
-    do not depend on any candidate restriction — so ONE table serves
-    every verification call in a staged run (each call previously built
-    its own dep- and ref-side masks: 2 aggregation jobs per call, 4+
-    per run, all computing subsets of the same values)."""
-    if not hot_values:
-        return None
-    spark = capf.sparkSession
-    n_chunks = (len(hot_values) + 63) // 64
-    hot_df = spark.createDataFrame(
-        [(x, y, i) for i, (x, y) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
-    )
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), idx % 64)")
-    return (
-        capf.join(F.broadcast(hot_df), on=["jv1", "jv2"])
-        .groupBy("h1", "h2")
-        .agg(
-            *[
-                F.bit_or(
-                    F.when(F.floor(F.col("idx") / 64) == c, bit).otherwise(F.lit(0))
-                ).alias(f"m{c}")
-                for c in range(n_chunks)
-            ]
-        )
-        .transform(lambda d: _materialize(d, "hot_masks"))
-    )
-
-
-def _support_pruned(
-    cands: DataFrame, supports: DataFrame | None
-) -> DataFrame:
+def _support_pruned(cands: DataFrame, supports: DataFrame) -> DataFrame:
     """Attach the 96-bit dep/ref hashes and apply the two exact support
-    prunes (when a support table is given) BEFORE any instance work —
+    prunes BEFORE any instance work —
     the lattice merges construct refs freely, so most candidates die
     here:
 
@@ -186,17 +137,15 @@ def _support_pruned(
     2/2's parents are true 2/1s, and a true 2/1 always survives both
     prunes, so pruning the seed loses no true 2/2 candidate.  Extra
     columns on ``cands`` (provenance tags) pass through untouched."""
-    pruned = cands.select(
-        "*",
-        F.xxhash64("dep_code", "dep_v1", "dep_v2").alias("dep_h1"),
-        F.hash("dep_code", "dep_v1", "dep_v2").alias("dep_h2"),
-        F.xxhash64("ref_code", "ref_v1", "ref_v2").alias("ref_h1"),
-        F.hash("ref_code", "ref_v1", "ref_v2").alias("ref_h2"),
-    )
-    if supports is None:
-        return pruned
     return (
-        pruned.join(
+        cands.select(
+            "*",
+            F.xxhash64("dep_code", "dep_v1", "dep_v2").alias("dep_h1"),
+            F.hash("dep_code", "dep_v1", "dep_v2").alias("dep_h2"),
+            F.xxhash64("ref_code", "ref_v1", "ref_v2").alias("ref_h1"),
+            F.hash("ref_code", "ref_v1", "ref_v2").alias("ref_h2"),
+        )
+        .join(
             F.broadcast(
                 supports.select(
                     F.col("h1").alias("ref_h1"),
@@ -222,14 +171,12 @@ def _support_pruned(
 
 
 def _verify_candidates(
-    dep_caps: DataFrame,
-    ref_caps: DataFrame,
+    caps: DataFrame,
     cands: DataFrame,
-    label: str = "",
-    hot_values: list | None = None,
-    hot_masks: DataFrame | None = None,
-    supports: DataFrame | None = None,
-    hot_overflow: DataFrame | None = None,
+    hot_values: list,
+    hot_masks: DataFrame | None,
+    supports: DataFrame,
+    hot_overflow: DataFrame | None,
 ) -> DataFrame:
     """Exact evidence check for candidate CINDs: count join values where
     dep and ref co-occur, restricted to candidate captures up front
@@ -237,7 +184,7 @@ def _verify_candidates(
     candidate holds iff its co-occurrence count equals the dep support
     (the relational form of G10-G12 extraction + A5 intersection).
 
-    The instance tables are the hashed capf form ``(jv1, jv2, h1, h2,
+    The instance table is the hashed capf form ``(jv1, jv2, h1, h2,
     support)`` and every join/aggregate here runs on fixed-width hash
     keys; candidate strings (which the lattice merges constructed
     explicitly) are hashed directly and restored from the result-sized
@@ -253,209 +200,93 @@ def _verify_candidates(
     refs_per_dep) dwarfs the join_value co-occurrence output, spilling
     tens of GB.
 
-    Hot join values (many candidate deps × many candidate refs on one
-    key) would still blow up the join, so they are split off: unlike
-    discovery, verification KNOWS its pairs up front, and a hot line's
-    contribution to every candidate pair is computed from broadcast
-    per-capture membership bitmasks (``bit_count(a & b)``) — linear in
-    candidates, the hub product never materializes.  Cold lines are
-    counted through the equi-join as usual.  Always exact.
-
-    The hot census (self-run or caller-provided) is CAPPED at
-    ``MAX_HOT_MASK`` lines, mirroring ``capture_overlaps``: only the
-    hottest lines earn bitmask columns + a driver-collected tuple, so a
-    pathological hub distribution cannot blow up the driver list or the
-    mask width.  Lines beyond the cap (``hot_overflow``, never
-    collected) are still counted exactly — through a salted bipartite
-    join (dep side bucketed by capture hash, ref side replicated
-    ``N_SALT`` ways) so their k² product spreads over ``N_SALT`` join
-    keys instead of landing on one task."""
-    spark = dep_caps.sparkSession
-    pruned = _support_pruned(
-        cands.select(*_CIND_KEY).distinct(), supports
+    Hub join lines (many candidate deps × many candidate refs on one
+    key) would still blow up the join, so they go through the hot-line
+    kernel of ``operators.cind``: unlike discovery, verification KNOWS
+    its pairs up front, so a hot line's contribution to every candidate
+    pair is read off the caller's full-line mask table
+    (``hot_line_overlap``) — linear in candidates, the hub product never
+    materializes.  The remaining lines, including the census overflow
+    past the mask cap, are counted by ``cold_line_join``.  Always
+    exact: mask values depend only on (capture, hot line set), and the
+    full-line census is a superset of any restricted side's hot set."""
+    ch = _materialize(
+        _support_pruned(cands.select(*_CIND_KEY).distinct(), supports),
+        "cand:12+21+22",
     )
-    ch = _materialize(pruned, f"cand:{label}")
-    # Hub-safety gate: the hot-line machinery protects against one join
-    # value fanning out k_dep × k_ref pairs in a single task — but with
-    # a candidate restriction the per-line pair product is bounded by
-    # (#distinct candidate dep captures) × (#distinct candidate ref
-    # captures).  When that global bound is itself below the hot-line
-    # task threshold, no line can melt a task and the plain exact join
-    # wins (skips the mask joins, the cold/overflow split, and several
-    # instance-cache scans).  The two counts are result-sized
-    # aggregates over the materialized candidate table.  (After the
-    # support prunes the 2/2 class routinely lands here: 4 candidates
-    # at sf0.1.)
-    # one aggregate job for both counts (was two separate distinct
-    # count jobs — each a full driver barrier over the result-sized
-    # candidate table)
+    # Hub-safety gate: with a candidate restriction the per-line pair
+    # product is bounded by (#distinct candidate dep captures) ×
+    # (#distinct candidate ref captures).  When that global bound is
+    # safe, no line can melt a task and the plain exact join wins (skips
+    # the mask joins, the cold/overflow split, and several instance-cache
+    # scans).  Both counts come from one result-sized aggregate over the
+    # materialized candidate table.
     _g = ch.select(
         F.count_distinct("dep_h1", "dep_h2").alias("nd"),
         F.count_distinct("ref_h1", "ref_h2").alias("nr"),
     ).collect()[0]
-    n_dep_caps, n_ref_caps = _g.nd, _g.nr
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(
-            f"## gate {label}: n_dep={n_dep_caps} n_ref={n_ref_caps} "
-            f"plain={n_dep_caps * n_ref_caps <= HOT_LINE_K * HOT_LINE_K}",
-            flush=True,
-        )
-    if n_dep_caps * n_ref_caps <= HOT_LINE_K * HOT_LINE_K:
-        hot_values = []
-        hot_overflow = None
+    plain = line_product_is_safe(_g.nd, _g.nr)
+    if os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
+        print(f"## gate 12+21+22: n_dep={_g.nd} n_ref={_g.nr} plain={plain}", flush=True)
     pair_keys = ch.select(*_PAIR_H)
-    a = dep_caps.join(
+    a = caps.join(
         F.broadcast(ch.select(F.col("dep_h1").alias("h1"), F.col("dep_h2").alias("h2")).distinct()),
         on=["h1", "h2"],
         how="left_semi",
     ).select(
-        "jv1",
-        "jv2",
+        *JV,
         F.col("h1").alias("dep_h1"),
         F.col("h2").alias("dep_h2"),
         F.col("support").alias("dep_support"),
     )
-    b = ref_caps.join(
+    b = caps.join(
         F.broadcast(ch.select(F.col("ref_h1").alias("h1"), F.col("ref_h2").alias("h2")).distinct()),
         on=["h1", "h2"],
         how="left_semi",
-    ).select(
-        "jv1",
-        "jv2",
-        F.col("h1").alias("ref_h1"),
-        F.col("h2").alias("ref_h2"),
-    )
-    jv = ["jv1", "jv2"]
-    if hot_values is None:
-        # hot census on the restricted sides: a value is hot when its
-        # pair product would dominate a task.  Callers that verify
-        # several candidate classes pass one precomputed full-line hot
-        # set instead: restricted widths are bounded by the full line
-        # width, so the full-line census is a correct superset and the
-        # per-call census jobs are saved.  Bounded collect: only the
-        # MAX_HOT_MASK hottest lines come to the driver (deterministic
-        # tie-break); the remainder becomes the uncollected overflow.
-        sz = (
-            a.groupBy(*jv)
-            .agg(F.count("*").alias("na"))
-            .join(b.groupBy(*jv).agg(F.count("*").alias("nb")), on=jv)
-            .filter(F.col("na") * F.col("nb") > HOT_LINE_K * HOT_LINE_K)
-        )
-        top = (
-            sz.orderBy((F.col("na") * F.col("nb")).desc(), "jv1", "jv2")
-            .limit(MAX_HOT_MASK)
-            .select(*jv)
-        )
-        hot_values = [(r.jv1, r.jv2) for r in top.collect()]
-        if len(hot_values) == MAX_HOT_MASK:
-            top_df = spark.createDataFrame(hot_values, "jv1 long, jv2 int")
-            hot_overflow = sz.select(*jv).join(
-                F.broadcast(top_df), on=jv, how="left_anti"
-            )
-    if supports is not None:
-        # candidate dep supports straight off the cached frequent table
-        # (hash-keyed, result-bounded) — no distinct pass over the
-        # restricted instance rows
-        dsup = supports.select(
-            F.col("h1").alias("dep_h1"),
-            F.col("h2").alias("dep_h2"),
-            F.col("support").alias("dep_support"),
-        ).join(
-            F.broadcast(ch.select(*_DEP_H).distinct()), on=_DEP_H, how="left_semi"
-        )
-    else:
-        dsup = a.select(*_DEP_H, "dep_support").distinct()
+    ).select(*JV, F.col("h1").alias("ref_h1"), F.col("h2").alias("ref_h2"))
 
     def _restore(verified: DataFrame) -> DataFrame:
         return verified.join(F.broadcast(ch), on=_PAIR_H).select(
             *_CIND_KEY, "support"
         )
 
-    if not hot_values:
-        pairs = a.join(b, on=jv).join(F.broadcast(pair_keys), on=_PAIR_H)
+    if plain or not hot_values:
+        pairs = a.join(b, on=JV).join(F.broadcast(pair_keys), on=_PAIR_H)
         return _restore(
             pairs.groupBy(*_PAIR_H, "dep_support")
             .agg(F.count("*").alias("overlap"))
             .filter(F.col("overlap") == F.col("dep_support"))
             .select(*_PAIR_H, F.col("dep_support").alias("support"))
         )
-    n_chunks = (len(hot_values) + 63) // 64
-    hot_df = spark.createDataFrame(
-        [(x, y, i) for i, (x, y) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
-    )
-    if hot_masks is None:
-        hot_masks = _hot_mask_table(
-            dep_caps.select("jv1", "jv2", "h1", "h2").unionByName(
-                ref_caps.select("jv1", "jv2", "h1", "h2")
-            ).dropDuplicates(["jv1", "jv2", "h1", "h2"]),
-            hot_values,
-        )
-    # the shared mask table is keyed by capture hash; rename per side
-    # (values for captures outside the restriction are simply never
-    # probed — pair_keys drives the joins)
-    amask = hot_masks.select(
+    # candidate dep supports straight off the cached frequent table
+    # (hash-keyed, result-bounded) — no distinct pass over the
+    # restricted instance rows
+    dsup = supports.select(
         F.col("h1").alias("dep_h1"),
         F.col("h2").alias("dep_h2"),
-        *[F.col(f"m{c}").alias(f"am{c}") for c in range(n_chunks)],
-    )
-    bmask = hot_masks.select(
-        F.col("h1").alias("ref_h1"),
-        F.col("h2").alias("ref_h2"),
-        *[F.col(f"m{c}").alias(f"bm{c}") for c in range(n_chunks)],
-    )
-    hot_names = hot_df.select(*jv)
-    cold_a = a.join(F.broadcast(hot_names), on=jv, how="left_anti")
-    cold_b = b.join(F.broadcast(hot_names), on=jv, how="left_anti")
-    if hot_overflow is None:
-        pair_stream = cold_a.join(cold_b, on=jv)
-    else:
-        # Mask-cap overflow: hot lines beyond MAX_HOT_MASK stay on the
-        # cold side, but their k² pair product must not land on one
-        # task — count them through a salted bipartite join (per-line
-        # counts are additive, so splitting the cold lines into
-        # normal ∪ overflow and unioning the pair streams is exact).
-        ovf_names = hot_overflow.select(*jv)
-        an = cold_a.join(F.broadcast(ovf_names), on=jv, how="left_anti")
-        bn = cold_b.join(F.broadcast(ovf_names), on=jv, how="left_anti")
-        ao = cold_a.join(F.broadcast(ovf_names), on=jv, how="left_semi").withColumn(
-            "bk", F.pmod(F.hash("dep_h1", "dep_h2"), F.lit(N_SALT))
-        )
-        bo = cold_b.join(F.broadcast(ovf_names), on=jv, how="left_semi").withColumn(
-            "bk", F.explode(F.array(*[F.lit(i) for i in range(N_SALT)]))
-        )
-        pair_stream = an.join(bn, on=jv).unionByName(
-            ao.join(bo, on=[*jv, "bk"]).drop("bk")
-        )
+        F.col("support").alias("dep_support"),
+    ).join(F.broadcast(ch.select(*_DEP_H).distinct()), on=_DEP_H, how="left_semi")
     cold_cnt = (
-        pair_stream.join(F.broadcast(pair_keys), on=_PAIR_H)
+        cold_line_join(a, b, hot_values, hot_overflow)
+        .join(F.broadcast(pair_keys), on=_PAIR_H)
         .groupBy(*_PAIR_H)
         .agg(F.count("*").alias("cold_overlap"))
     )
-    hot_common = reduce(
-        lambda x, y: x + y,
-        [
-            F.bit_count(
-                F.coalesce(F.col(f"am{c}"), F.lit(0)).bitwiseAND(
-                    F.coalesce(F.col(f"bm{c}"), F.lit(0))
-                )
-            )
-            for c in range(n_chunks)
-        ],
-    )
+    # the shared mask table is keyed by capture hash, renamed per side
+    # (captures outside the restriction are never probed — pair_keys
+    # drives the joins)
     return _restore(
-        pair_keys.join(F.broadcast(amask), on=_DEP_H, how="left")
-        .join(F.broadcast(bmask), on=_REF_H, how="left")
+        pair_keys.join(F.broadcast(masks_as(hot_masks, "dep")), on=_DEP_H, how="left")
+        .join(F.broadcast(masks_as(hot_masks, "ref")), on=_REF_H, how="left")
         .join(cold_cnt, on=_PAIR_H, how="left")
         .join(F.broadcast(dsup), on=_DEP_H)
         .select(
             *_PAIR_H,
             "dep_support",
-            (F.coalesce(F.col("cold_overlap"), F.lit(0)) + hot_common).alias(
-                "overlap"
-            ),
+            (
+                F.coalesce(F.col("cold_overlap"), F.lit(0))
+                + hot_line_overlap("dep", "ref", hot_values)
+            ).alias("overlap"),
         )
         .filter(F.col("overlap") == F.col("dep_support"))
         .select(*_PAIR_H, F.col("dep_support").alias("support"))
@@ -463,21 +294,17 @@ def _verify_candidates(
 
 
 def _merged_dep_candidates(
-    left: DataFrame, right: DataFrame, allowed_deps: DataFrame
+    partners: DataFrame, allowed_deps: DataFrame
 ) -> DataFrame:
-    """Join two directional (dep → ref) sets on their ref and merge the
-    two unary deps into a canonical binary dep.
-
-    Contract: ``left`` and ``right`` must be the SAME logical set (the
-    single call site passes ``partners`` twice) — the bipartite
-    lower/higher-code enumeration below draws side A from ``left`` and
-    side B from ``right`` only, which covers all unordered pairs
-    exactly when both sides are equal.
+    """Self-join the directional (dep → ref) ``partners`` set on its ref
+    and merge pairs of unary deps into a canonical binary dep, tagged
+    with the provenance described below (``partners`` carries an
+    ``is_cind`` column).
 
     ``allowed_deps``: result-sized (dep_code, dep_v1, dep_v2) whitelist
     (the frequent binary captures) — a merged dep that is not frequent
     can never verify (its support is below min_support by definition).
-    Both inputs are pre-restricted to deps that generalize SOME
+    Both join sides are pre-restricted to deps that generalize SOME
     whitelisted binary (shrinking the quadratic per-ref pair join
     itself), and the whitelist semi-join runs BEFORE the dedup so the
     distinct shuffle is result-bounded, not explosion-bounded.
@@ -530,10 +357,8 @@ def _merged_dep_candidates(
     # every generated row IS a valid merge in canonical orientation
     # (Σ ka×kb per (ref, projection) cell — an order of magnitude
     # fewer rows, and the hub key splits across its projection cells).
-    tagged = "is_cind" in left.columns and "is_cind" in right.columns
     refmap = (
-        left.select(*_REF_KEY)
-        .unionByName(right.select(*_REF_KEY))
+        partners.select(*_REF_KEY)
         .distinct()
         .select(F.xxhash64(*_REF_KEY).alias("rh"), *_REF_KEY)
     )
@@ -548,8 +373,7 @@ def _merged_dep_candidates(
     # out to every matching string) — never drop one — and fabricated
     # candidates die in exact verification, same argument as rh.
     vmap = (
-        left.select("dep_v1")
-        .unionByName(right.select("dep_v1"))
+        partners.select("dep_v1")
         .distinct()
         .select(F.xxhash64("dep_v1").alias("vh"), F.col("dep_v1").alias("v"))
     )
@@ -565,25 +389,25 @@ def _merged_dep_candidates(
         higher_codes.append(cc.create_condition_code(hi, sec_field))
     sec = F.col("dep_code").bitwiseAND(F.lit(cc.SECONDARY_MASK)).alias("sec")
     l = (
-        _mergeable(left)
+        _mergeable(partners)
         .filter(F.col("dep_code").isin(lower_codes))
         .select(
             F.xxhash64(*_REF_KEY).alias("rh"),
             sec,
             F.col("dep_code").alias("l_code"),
             F.xxhash64("dep_v1").alias("l_vh"),
-            *([F.col("is_cind").alias("l_cind")] if tagged else []),
+            F.col("is_cind").alias("l_cind"),
         )
     )
     r = (
-        _mergeable(right)
+        _mergeable(partners)
         .filter(F.col("dep_code").isin(higher_codes))
         .select(
             F.xxhash64(*_REF_KEY).alias("rh"),
             sec,
             F.col("dep_code").alias("r_code"),
             F.xxhash64("dep_v1").alias("r_vh"),
-            *([F.col("is_cind").alias("r_cind")] if tagged else []),
+            F.col("is_cind").alias("r_cind"),
         )
     )
     merged = (
@@ -593,25 +417,20 @@ def _merged_dep_candidates(
             F.col("l_vh").alias("v1h"),
             F.col("r_vh").alias("v2h"),
             "rh",
-            *([F.col("l_cind"), F.col("r_cind")] if tagged else []),
+            "l_cind",
+            "r_cind",
         )
         .join(F.broadcast(allowed_h), on=["dep_code", "v1h", "v2h"], how="left_semi")
     )
-    hkey = ["dep_code", "v1h", "v2h", "rh"]
-    if not tagged:
-        deduped = merged.select(*hkey).distinct()
-    else:
-        # Provenance per candidate (a candidate can arise from many
-        # pairs): ``exact`` — SOME generating pair had neither side a
-        # full 1/1 CIND (the reference's proper × proper candidates,
-        # the only ones it verifies); ``inferred`` — SOME pair involved
-        # a 1/1 CIND (true but non-minimal 2/1s, used only to seed 2/2
-        # candidates).
-        deduped = merged.groupBy(*hkey).agg(
-            F.max(~F.col("l_cind") & ~F.col("r_cind")).alias("exact"),
-            F.max(F.col("l_cind") | F.col("r_cind")).alias("inferred"),
-        )
-    extra = ["exact", "inferred"] if tagged else []
+    # Provenance per candidate (a candidate can arise from many pairs):
+    # ``exact`` — SOME generating pair had neither side a full 1/1 CIND
+    # (the reference's proper × proper candidates, the only ones it
+    # verifies); ``inferred`` — SOME pair involved a 1/1 CIND (true but
+    # non-minimal 2/1s, used only to seed 2/2 candidates).
+    deduped = merged.groupBy("dep_code", "v1h", "v2h", "rh").agg(
+        F.max(~F.col("l_cind") & ~F.col("r_cind")).alias("exact"),
+        F.max(F.col("l_cind") | F.col("r_cind")).alias("inferred"),
+    )
     return (
         deduped.join(
             F.broadcast(vmap.select(F.col("vh").alias("v1h"), F.col("v").alias("dep_v1"))),
@@ -622,7 +441,7 @@ def _merged_dep_candidates(
             on="v2h",
         )
         .join(F.broadcast(refmap), on="rh")
-        .select(*_CIND_KEY, *extra)
+        .select(*_CIND_KEY, "exact", "inferred")
     )
 
 
@@ -645,49 +464,30 @@ def discover_cinds_staged(
     _cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
         triples, min_support, projection, defer_frequent=True
     )
-    # one full-line hot census shared by all three verification stages
-    # (superset of any restricted-side hot set; see _verify_candidates),
-    # and ONE capture→hot-line bitmask table reused by every consumer.
-    # Bounded collect, mirroring capture_overlaps: only the MAX_HOT_MASK
-    # hottest lines get mask columns + a driver tuple; the uncollected
-    # remainder routes through _verify_candidates' salted overflow path.
-    hot_sizes = (
-        capf.groupBy("jv1", "jv2")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") > HOT_LINE_K)
-    )
-    import os as _os
-    import time as _time
+    # ONE full-line hot census (the kernel's bounded collect) shared by
+    # the stage-1 pair join and the evidence join — a superset of any
+    # restricted side's hot set, and the decomposition is exact for any
+    # hot set — plus ONE capture→hot-line mask table for both.
+    hot_values, hot_overflow = hot_line_census(capf)
+    if hot_overflow is not None:
+        # checkpoint: consumed by both the pair stage and the evidence
+        # join, which would otherwise re-run the census aggregate
+        hot_overflow = _materialize(hot_overflow, "hot_overflow")
 
-    _t0 = _time.time()
-    hot_shared = [
-        (r.jv1, r.jv2)
-        for r in hot_sizes.orderBy(F.col("w").desc(), "jv1", "jv2")
-        .limit(MAX_HOT_MASK)
-        .select("jv1", "jv2")
-        .collect()
-    ]
-    if _os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"## stage hot_census: {_time.time() - _t0:.1f}s", flush=True)
-    hot_overflow = None
-    if len(hot_shared) == MAX_HOT_MASK:
-        top_df = spark.createDataFrame(hot_shared, "jv1 long, jv2 int")
-        # checkpoint: consumed by both evidence joins, and recomputing
-        # it there would re-run the census aggregate each time
-        hot_overflow = (
-            hot_sizes.select("jv1", "jv2")
-            .join(F.broadcast(top_df), on=["jv1", "jv2"], how="left_anti")
-            .transform(lambda d: _materialize(d, "hot_overflow"))
-        )
-    # The mask table is consumed first by the 1/2+2/1 evidence join —
-    # three stages from now — so its aggregate runs in a background
-    # thread, overlapping stage 1's pair join (Spark schedules jobs
-    # from concurrent driver threads independently; the .result() below
-    # is the synchronization point).
+    # The mask table is consumed first by the evidence join — three
+    # stages from now — so its aggregate runs in a background thread,
+    # overlapping stage 1's pair join (Spark schedules jobs from
+    # concurrent driver threads independently; the .result() below is
+    # the synchronization point).
+    def _masks() -> DataFrame | None:
+        if not hot_values:
+            return None
+        return _materialize(hot_line_masks(capf, hot_values), "hot_masks")
+
     import concurrent.futures
 
     _bg = concurrent.futures.ThreadPoolExecutor(max_workers=1)
-    _mask_fut = _bg.submit(_hot_mask_table, capf, hot_shared)
+    _mask_fut = _bg.submit(_masks)
     freq_u = frequent.filter(F.col("code").isin(list(cc.VALID_UNARY_CODES)))
 
     def _keys_of(freq_subset: DataFrame) -> DataFrame:
@@ -706,7 +506,7 @@ def discover_cinds_staged(
         capu,
         freq_u,
         min_overlap=min_support,
-        hot_values=hot_shared,
+        hot_values=hot_values,
         hot_overflow=hot_overflow,
     )
     ov_uu = _materialize(ov_uu.coalesce(spark.sparkContext.defaultParallelism), "ov_uu")
@@ -809,9 +609,9 @@ def discover_cinds_staged(
         F.col("v1").alias("dep_v1"),
         F.col("v2").alias("dep_v2"),
     )
-    partners_m = partners.select(*_CIND_KEY, "is_cind")
     cand21 = _materialize(
-        _merged_dep_candidates(partners_m, partners_m, freq_bdep), "cand:21"
+        _merged_dep_candidates(partners.select(*_CIND_KEY, "is_cind"), freq_bdep),
+        "cand:21",
     )
 
     # ---- stage 4 candidates: 2/2 — 2/1s sharing a dep (G9/G8).  The
@@ -890,14 +690,12 @@ def discover_cinds_staged(
     verified = _materialize(
         _verify_candidates(
             capf,
-            capf,
             cand12.unionByName(cand21.filter("exact").select(*_CIND_KEY))
             .unionByName(cand22),
-            "12+21+22",
-            hot_shared,
-            hot_masks=hot_masks,
-            supports=freq_h,
-            hot_overflow=hot_overflow,
+            hot_values,
+            hot_masks,
+            freq_h,
+            hot_overflow,
         ),
         "cind12_21_22",
     )

@@ -264,9 +264,11 @@ def salted_join(
     salt value has a matching right-side replica; do not rely on it for
     reproducible row placement.
 
-    This is the generic form of the CIND engine's internal hub-line
-    handling (operators/cind.py `_salted_pair_counts`) exposed as a
-    reusable operator.  AQE's skew-join split handles moderate skew on
+    The CIND hot-line kernel joins its mask-cap overflow lines through
+    it (operators/cind.py ``cold_line_join``, the staged engine's
+    evidence verify); the discovery pair count keeps its own salted
+    triangle self-join (``_salted_pair_counts``), which needs each
+    unordered pair once.  AQE's skew-join split handles moderate skew on
     its own; explicit salting is for the regime where a single key
     exceeds what one task can hold at all.  ``right`` is replicated
     ``salt``× — keep it the smaller side.

@@ -265,6 +265,24 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
         .count()
     )
     assert n_hot > 4, f"fixture must exceed the mask cap (got {n_hot} hot lines)"
+    # the census itself: the cap's worth of lines, hottest first, the
+    # same list on a rerun, the rest as overflow — and none below the cap
+    capf = pruned_captures(dcap, freq)
+    width = {
+        (r.jv1, r.jv2): r.k
+        for r in capf.groupBy("jv1", "jv2").agg(F.count("*").alias("k")).collect()
+    }
+    hot, overflow = cind_mod.hot_line_census(capf)
+    assert len(hot) == 4
+    widths = [width[v] for v in hot]
+    assert widths == sorted(widths, reverse=True)
+    assert min(widths) >= max(k for v, k in width.items() if v not in hot)
+    assert cind_mod.hot_line_census(capf)[0] == hot
+    assert overflow.count() == n_hot - 4
+    monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", n_hot + 1)
+    all_hot, no_overflow = cind_mod.hot_line_census(capf)
+    assert len(all_hot) == n_hot and no_overflow is None
+    monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
     for minimal in (False, True):
         expected = brute_cinds(triples, min_support=3, minimal=minimal)
         got = spark_cinds(spark, triples, min_support=3, minimal=minimal)

@@ -6,6 +6,7 @@ from __future__ import annotations
 import random
 
 import duckdb
+import pytest
 
 from rdfind_spark.operators.cind import discover_cinds
 from rdfind_spark.operators.rules import ar_implied_cind_keys, association_rules
@@ -48,20 +49,22 @@ def test_staged_matches_all_at_once_random(spark):
     assert staged, "fixture must produce CINDs"
 
 
-def test_staged_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
-    """More hot lines than MAX_HOT_MASK in the STAGED engine: the
-    shared census collect and the mask width stay bounded by the cap,
-    the overflow lines route through the salted bipartite overflow path
-    in _verify_candidates — and the result stays exact (mirror of the
-    all-at-once overflow test in test_cind_engine)."""
+@pytest.mark.parametrize("max_hot_mask", [4, 4096])
+def test_staged_hot_line_overflow_cap_matches_brute_force(
+    spark, monkeypatch, max_hot_mask
+):
+    """Hot lines in the STAGED engine, with more of them than
+    MAX_HOT_MASK (4: the census collect and the mask width stay bounded
+    by the cap, and the overflow lines route through cold_line_join's
+    salted join in _verify_candidates) and with all of them masked
+    (4096: the verify mask path without overflow) — the result stays
+    exact either way (mirror of the all-at-once overflow test in
+    test_cind_engine)."""
     from rdfind_spark.operators import cind as cind_mod
-    from rdfind_spark.operators import staged as staged_mod
 
-    # both modules hold their own copies of the imported constants
-    for mod in (cind_mod, staged_mod):
-        monkeypatch.setattr(mod, "HOT_LINE_K", 2)
-        monkeypatch.setattr(mod, "N_SALT", 4)
-        monkeypatch.setattr(mod, "MAX_HOT_MASK", 4)
+    monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
+    monkeypatch.setattr(cind_mod, "N_SALT", 4)
+    monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", max_hot_mask)
     rng = random.Random(11)
     triples = list(
         {
