@@ -156,9 +156,9 @@ def repeat_order_for(timings: dict, queries: set, heavy: set) -> list:
     min-of-2 — got its turn (r11: cind_zipf_skew drew 482.8s as a
     single run and poisoned the artifact).  Cost-descending ordering
     repeats the most weather-sensitive entries first; main() exempts
-    index 0 (the most expensive heavy) from the budget check entirely,
-    so a bad-phase first draw on the top heavy can never self-censor
-    its own repeat.  Ties break by bench-list position (deterministic)."""
+    index 0 (the most expensive heavy) from the budget check and does
+    not charge its repeat to the budget, so a bad-phase draw on the top
+    heavy can neither self-censor its own repeat nor starve the rest.  Ties break by bench-list position (deterministic)."""
     pos = {n: i for i, n in enumerate(BENCH_QUERIES)}
     return sorted(
         (n for n in BENCH_QUERIES if n in queries and n in heavy),
@@ -370,14 +370,13 @@ def main() -> int:
     # the heavy CIND queries); the heavy set runs twice and reports the
     # min — the steady-state cost a warmed cluster would sustain —
     # while the sub-15s tail runs once (noise there is absolute-small).
-    # The repeat pass is ROUND-ROBIN over the whole heavy set: every
-    # heavy query gets its second run before the budget can be spent on
-    # anything else (the round-3 interleaved scheme let the first three
-    # heavies eat the budget, leaving cind_all / capture_overlaps /
-    # capture_supports / graph_pagerank as unusable single cold runs).
-    # The budget default covers the full heavy-set repeat at observed
-    # sf0.1 costs (~440s with the round-7 min-of-2 widening), so
-    # starvation needs real VM weather.
+    # The repeat pass runs the heavies in DESCENDING first-run cost
+    # (repeat_order_for): the most weather-sensitive entries repeat
+    # first, and the top heavy (index 0) is exempt from the budget and
+    # not charged to it, so one bad draw on it can neither deny its own
+    # repeat nor starve the cheaper heavies of theirs.  The budget
+    # default covers the full heavy-set repeat at observed sf0.1 costs,
+    # so starvation needs real VM weather.
     heavy = HEAVY_QUERIES
     # 520 → 900 (r11 optimization round): cind_zipf_skew joined the
     # heavy set at ~90s calm / ~270s in a bad host phase, and the old
@@ -414,7 +413,8 @@ def main() -> int:
             print(f"# repeat skipped (budget): {name}", file=sys.stderr)
             continue
         elapsed = _run_once(name)
-        repeat_spent += elapsed
+        if i > 0:
+            repeat_spent += elapsed
         timings[name] = min(timings[name], elapsed)
         runs_per_query[name] = 2
     for name in timings:

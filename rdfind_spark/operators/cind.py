@@ -19,11 +19,17 @@ reference fights the same blow-up with Bloom filters + custom
 rebalancing, ``programs/RDFind.scala:404-444``).  Hub join lines go
 through the one hot-line kernel below (``hot_line_census``,
 ``hot_line_masks``, ``hot_line_overlap``, ``cold_line_join``), which the
-staged engine shares.
+staged engine shares.  Discovery enumerates pairs in one place,
+``_grouped_pair_counts``: each join line becomes a sorted capture array
+that emits its pairs through codegen'd generators, and a line wider
+than HOT_LINE_K is cut into position blocks whose block pairs are
+spread over tasks (the reference's join-line rebalancing in array
+form).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from functools import reduce
 
@@ -33,15 +39,17 @@ from pyspark.sql import functions as F
 
 from rdfind_spark import condition_codes as cc
 from rdfind_spark.operators.captures import capture_candidates
-from rdfind_spark.util import materialize, salted_join
+from rdfind_spark.util import materialize, release, salted_join
 
 CAPTURE_KEY = ["code", "v1", "v2"]
 
-# Salting parameters for the pair self-join: join lines with more than
-# HOT_LINE_K frequent captures are split into N_SALT hash buckets (see
-# capture_overlaps).  A line of HOT_LINE_K captures yields ≤ HOT_LINE_K²
-# ≈ 260k pairs from one key — roughly the point where one task's share
-# of the product outweighs the replication cost of salting.
+# A join line with more than HOT_LINE_K frequent captures is hot.  The
+# pair enumerator cuts such a line into HOT_LINE_K-wide position blocks
+# (see _grouped_pair_counts), so no task emits more than HOT_LINE_K²
+# ≈ 260k pairs from one cell — roughly the point where one task's share
+# of the product outweighs the cost of replicating the line's blocks.
+# N_SALT is the salt factor of the verify join over mask-cap overflow
+# lines (cold_line_join).
 HOT_LINE_K = 512
 N_SALT = 32
 
@@ -50,11 +58,13 @@ N_SALT = 32
 # driver-collected tuple, so a pathological hub distribution (tens of
 # thousands of hot lines) would mean hundreds of mask columns and an
 # unbounded collect.  Beyond the cap, only the MAX_HOT_MASK *hottest*
-# lines get masks; the overflow lines stay exact through salted joins
-# (graceful degradation, no driver blow-up).
+# lines get masks; the overflow lines stay exact through the block
+# split of the pair enumerator and the salted verify join (graceful
+# degradation, no driver blow-up).
 MAX_HOT_MASK = 4096
 
 JV = ["jv1", "jv2"]
+PKEY = ["a_h1", "a_h2", "b_h1", "b_h2"]
 
 
 def _pair_parallelism(df: DataFrame) -> int:
@@ -217,7 +227,8 @@ def _apply_sketch_filter(pairs: DataFrame, sketches: DataFrame) -> DataFrame:
 # MAX_HOT_MASK hottest hot lines are named on the driver and encoded as
 # per-capture 64-bit membership masks, so a pair's hot-line overlap is
 # a popcount instead of a k² join; hot lines past the cap (the
-# overflow) are never collected and stay exact through salted joins.
+# overflow) are never collected and stay exact as cold lines: the pair
+# enumerator block-splits them, the verify join salts them.
 
 
 def hot_line_census(capf: DataFrame) -> tuple[list, DataFrame | None]:
@@ -248,10 +259,19 @@ def hot_line_census(capf: DataFrame) -> tuple[list, DataFrame | None]:
 
 
 def _hot_index(df: DataFrame, hot_values: list) -> DataFrame:
-    """(jv1, jv2, idx): each named hot line with its mask bit index."""
-    return df.sparkSession.createDataFrame(
-        [(a, b, i) for i, (a, b) in enumerate(hot_values)],
-        "jv1 long, jv2 int, idx int",
+    """(jv1, jv2, idx): each named hot line with its mask bit index.
+    The keys travel as ONE JSON string literal, parsed in the JVM over a
+    one-row ``range``: no Python worker starts (a local-data frame runs
+    a Python RDD job), and the plan stays the same size however many
+    lines are named (per-line literal expressions would cost py4j calls
+    and analyzer work per line, thousands at MAX_HOT_MASK)."""
+    keys = F.from_json(F.lit(json.dumps(hot_values)), "array<array<bigint>>")
+    return (
+        df.sparkSession.range(1)
+        .select(F.posexplode(keys).alias("idx", "k"))
+        .select(
+            F.col("k")[0].alias("jv1"), F.col("k")[1].cast("int").alias("jv2"), "idx"
+        )
     )
 
 
@@ -359,7 +379,7 @@ def capture_overlaps(
     balanced pair emission, ``CreateUnaryUnaryOverlapCandidates``,
     generalized to all arities).
 
-    The quadratic pair join + aggregate run entirely on the compact
+    The quadratic pair emission + aggregate run entirely on the compact
     hashed keys from ``pruned_captures`` — fixed-width UnsafeRows keep
     the aggregation hash map small and make spill sort cheap (string
     keys here previously caused sort-based-agg fallback and a >10×
@@ -393,17 +413,18 @@ def capture_overlaps(
       a salted join over everything).  This is the reference's
       two-round approximate-then-verify pattern
       (``plan/LateBBTraversalStrategy``) made exact.
-    * The salted triangle self-join (``_salted_pair_counts``: hot-line
-      captures hash-bucketed into N_SALT groups spreading the k²
-      product over N_SALT(N_SALT+1)/2 join keys) remains as the
-      enumerator for the deep hot-only capture subset above.
+    * Every pair source — no hot lines, the cold lines, the deep
+      hot-only captures — is the one enumerator ``_grouped_pair_counts``.
+      The lines the census found wide (mask-cap overflow lines, hot
+      lines of a large deep class) are cut into position blocks there,
+      so no task emits more than HOT_LINE_K² pairs of one line.
 
     ``hot_values``/``hot_overflow``: a caller that already censused a
     SUPERSET of this input's hot lines (the staged engine's shared
     full-line census) passes it here to skip the census job — safe
     because the decomposition is exact for any hot set: lines named hot
-    are mask-counted, everything else flows through the cold/salted
-    paths.
+    are mask-counted, everything else (overflow lines included) is
+    enumerated as cold, the overflow lines block-split.
     """
     if hot_values is None:
         hot_values, hot_overflow = hot_line_census(capf)
@@ -412,15 +433,12 @@ def capture_overlaps(
             capf, hot_values, min_overlap, sketches, overflow=hot_overflow
         )
     else:
-        # no hot lines at all — every line is narrow, pairs come from
-        # the grouped line arrays (no self-join, no salting machinery)
+        # no hot lines at all — every line is narrow
         ov = _grouped_pair_counts(capf, min_overlap, sketches)
-    # ov is already unique per pair: the salted path ends in a
-    # groupBy(pair), and the decomposition dedupes its part1 ∪ part2
-    # union on the fixed-width hash keys before any strings exist — so
-    # no distinct on the restored (long URI string) table is needed
-    # (that string-key distinct measured as a significant share of
-    # capture_overlaps at sf0.1).
+    # ov is already unique per pair (every source ends in a groupBy on
+    # the fixed-width hash keys), so no distinct on the restored
+    # (long URI string) table is needed (that string-key distinct
+    # measured as a significant share of capture_overlaps at sf0.1).
     return _restore_capture_keys(ov, frequent)
 
 
@@ -433,23 +451,30 @@ def _cold_pair_counts_with_hot_masks(
 ) -> DataFrame:
     """Pair overlap counts = cold-line pair counts + per-pair hot-line
     contribution from broadcast bitmasks (see capture_overlaps).
+    ``overflow``: the census's hot lines past the mask cap, which stay
+    cold and are the cold side's only wide lines.
 
     Exact for ANY n_hot vs min_overlap relation:
 
-    * pairs with ≥1 cold co-occurrence are enumerated by the cold join
-      (kept when cold_count >= min_overlap - n_hot, the weakest bound a
-      qualifying pair can satisfy);
-    * pairs living ONLY in hot lines can qualify only if BOTH captures
-      sit in >= min_overlap distinct hot lines ("deep" captures, found
-      from the mask popcounts — usually none, always few).  Their pairs
-      are enumerated by a salted join restricted to deep-capture rows in
-      hot lines, with the same mask-based totals.
+    * part1 — pairs with ≥1 cold co-occurrence are enumerated over the
+      cold lines (kept when cold_count >= min_overlap - n_hot, the
+      weakest bound a qualifying pair can satisfy) and completed with
+      their mask popcount;
+    * part2 — pairs living ONLY in hot lines can qualify only if BOTH
+      captures sit in >= min_overlap distinct hot lines ("deep"
+      captures, found from the mask popcounts — usually none, always
+      few).  Their pairs are enumerated over the deep captures' hot-line
+      rows, which counts their hot-line overlap; a hot line can hold
+      more than HOT_LINE_K of them only when there are that many.
 
-    Both sources emit (pair, cold+hot total); overlaps of a pair agree,
-    so the union is deduplicated downstream after key restoration.  This
-    keeps the hub k² unmaterialized even when hot lines outnumber
-    min_overlap (where the old gate fell back to the salted join over
-    everything: measured 22× slower at a 2× scale probe)."""
+    A pair in both parts has a cold count ≥ 1, so its part1 total is
+    strictly larger than its part2 hot count: the merge keeps the larger
+    overlap per pair, which is the exact total.  Both parts come out of
+    ``_grouped_pair_counts`` in (h1, h2)-lex orientation, so the same
+    unordered pair always carries the same key.  The hub k² stays
+    unmaterialized even when hot lines outnumber min_overlap (where
+    the old gate fell back to the salted join over everything:
+    measured 22× slower at a 2× scale probe)."""
     n_hot = len(hot_values)
     # masks feeds THREE consumers (the two side-renamed broadcasts and
     # the deep popcount probe) whose plans differ only in aliases — too
@@ -461,28 +486,14 @@ def _cold_pair_counts_with_hot_masks(
     masks = materialize(hot_line_masks(capf, hot_values))
     hot_keys = F.broadcast(_hot_keys(capf, hot_values))
     cold = capf.join(hot_keys, on=JV, how="left_anti")
-    pkey = ["a_h1", "a_h2", "b_h1", "b_h2"]
-    cold_floor = max(1, min_overlap - n_hot)
-    if overflow is not None:
-        # Mask-cap overflow: hot lines beyond MAX_HOT_MASK stay in
-        # the "cold" side but their k² pair product must not land
-        # on one task — enumerate all cold pairs through the salted
-        # triangle join with the overflow lines as its hot set
-        # (exact counts, same semantics as the plain join below).
-        ov_cold = _salted_pair_counts(
-            cold, overflow, cold_floor, sketches
-        ).withColumnRenamed("overlap", "cold_overlap")
-    else:
-        # Cold lines are all narrow — emit their pairs from grouped
-        # line arrays instead of self-joining (_grouped_pair_counts).
-        ov_cold = _grouped_pair_counts(
-            cold, cold_floor, sketches
-        ).withColumnRenamed("overlap", "cold_overlap")
+    ov_cold = _grouped_pair_counts(
+        cold, max(1, min_overlap - n_hot), sketches, wide=overflow
+    ).withColumnRenamed("overlap", "cold_overlap")
     with_masks = ov_cold.join(
         F.broadcast(masks_as(masks, "a")), on=["a_h1", "a_h2"], how="left"
     ).join(F.broadcast(masks_as(masks, "b")), on=["b_h1", "b_h2"], how="left")
     part1 = with_masks.select(
-        *pkey,
+        *PKEY,
         (F.col("cold_overlap") + hot_line_overlap("a", "b", hot_values)).alias(
             "overlap"
         ),
@@ -493,216 +504,134 @@ def _cold_pair_counts_with_hot_masks(
     # Hot-only qualifiers: cold_count = 0 is the only miss class (a pair
     # with 0 < cold < threshold tops out at min_overlap - 1; see
     # docstring), and such a pair needs BOTH captures in >= min_overlap
-    # distinct hot lines.  Those "deep" captures are read off the mask
-    # popcounts; their pairs are enumerated with the salted join over
-    # hot-line rows only, then completed with targeted cold counts so
-    # totals agree with part1 on any pair both sources emit.
+    # distinct hot lines.
     popcnt = _popcount(F.col(f"m{c}") for c in range(_mask_words(hot_values)))
     deep = materialize(masks.filter(popcnt >= min_overlap).select("h1", "h2"))
-    if deep.count() == 0:
+    n_deep = deep.count()
+    if n_deep == 0:
         return part1
     hot_rows = capf.join(hot_keys, on=JV).join(
         F.broadcast(deep), on=["h1", "h2"], how="left_semi"
     )
-    hp = _salted_pair_counts(hot_rows, hot_values, 1, sketches).select(
-        *pkey, F.col("overlap").alias("hot_overlap")
+    part2 = _grouped_pair_counts(
+        hot_rows, min_overlap, sketches,
+        wide=hot_keys if n_deep > HOT_LINE_K else None,
     )
-    deep_cold = cold.join(F.broadcast(deep), on=["h1", "h2"], how="left_semi")
-    ca = deep_cold.select(
-        "jv1", "jv2", F.col("h1").alias("a_h1"), F.col("h2").alias("a_h2")
+    return (
+        part1.unionByName(part2)
+        .groupBy(*PKEY)
+        .agg(F.max("overlap").alias("overlap"))
     )
-    cb = deep_cold.select(
-        "jv1", "jv2", F.col("h1").alias("b_h1"), F.col("h2").alias("b_h2")
-    )
-    cold2 = (
-        ca.join(cb, on=["jv1", "jv2"])
-        .join(F.broadcast(hp.select(*pkey)), on=pkey, how="left_semi")
-        .groupBy(*pkey)
-        .agg(F.count("*").alias("cold2"))
-    )
-    part2 = (
-        hp.join(cold2, on=pkey, how="left")
+
+
+def _cell_pairs(cells: DataFrame) -> DataFrame:
+    """The pair rows of ``(left, right, diag)`` cells of sorted capture
+    arrays: every x of ``left`` with every y of ``right``, or, in a
+    diagonal cell (``left`` is ``right``), every x with each y after it.
+    Two codegen'd generators — ``posexplode`` for x and its position,
+    ``explode`` over the rest of the array for y — so no SQL lambda runs
+    per element."""
+    rest = F.when(
+        F.col("diag"),
+        F.slice("right", F.col("i") + 2, F.size("right") - 1 - F.col("i")),
+    ).otherwise(F.col("right"))
+    return (
+        cells.select("right", "diag", F.posexplode("left").alias("i", "x"))
+        .select("x", F.explode(rest).alias("y"))
         .select(
-            *pkey,
-            (F.col("hot_overlap") + F.coalesce(F.col("cold2"), F.lit(0))).alias(
-                "overlap"
-            ),
+            F.col("x.h1").alias("a_h1"),
+            F.col("x.h2").alias("a_h2"),
+            F.col("y.h1").alias("b_h1"),
+            F.col("y.h2").alias("b_h2"),
         )
-        .filter(F.col("overlap") >= min_overlap)
     )
-    # A pair can be emitted by BOTH sources (its totals agree, see
-    # docstring) — dedupe here on the fixed-width hash keys, while no
-    # capture strings are attached yet.  The two sources orient pairs
-    # differently (part1: hash-lex from the plain cold join — or
-    # (tb, hash)-lex in the overflow branch; part2: (tb, hash)-lex from
-    # the salted triangle join), so the SAME unordered pair can arrive
-    # with swapped key columns and dropDuplicates alone would keep both
-    # rows (observed: 1,818 duplicate celebrity pairs on the Zipf
-    # fixture at sf0.01).  Normalize every row to hash-lex orientation
-    # first — overlap is symmetric, so the swap is payload-free.
-    both = part1.unionByName(part2)
-    swap = F.struct("a_h1", "a_h2") > F.struct("b_h1", "b_h2")
-    normalized = both.select(
-        F.when(swap, F.col("b_h1")).otherwise(F.col("a_h1")).alias("a_h1"),
-        F.when(swap, F.col("b_h2")).otherwise(F.col("a_h2")).alias("a_h2"),
-        F.when(swap, F.col("a_h1")).otherwise(F.col("b_h1")).alias("b_h1"),
-        F.when(swap, F.col("a_h2")).otherwise(F.col("b_h2")).alias("b_h2"),
-        "overlap",
+
+
+def _line_arrays(rows: DataFrame, n_pair: int) -> DataFrame:
+    """(jv1, jv2, caps): each join line's captures as one array sorted
+    by (h1, h2), grouped over ONE exchange (complete-mode aggregate —
+    the child repartition already satisfies the distribution)."""
+    return (
+        rows.repartition(n_pair, *JV)
+        .groupBy(*JV)
+        .agg(F.sort_array(F.collect_list(F.struct("h1", "h2"))).alias("caps"))
     )
-    return normalized.dropDuplicates(pkey)
 
 
 def _grouped_pair_counts(
     capf: DataFrame,
     min_overlap: int,
     sketches: DataFrame | None = None,
+    wide: DataFrame | None = None,
 ) -> DataFrame:
-    """Pair overlap counts for a capture table whose join lines are all
-    narrow (<= HOT_LINE_K captures — the cold side of the hot/cold
-    decomposition, or everything when no line is hot): group each line
-    into a sorted capture array and EMIT its C(k,2) pairs directly with
-    a higher-order transform, instead of self-joining the table.
+    """Pair overlap counts of a capture table, the discovery's one pair
+    enumerator: group each join line into a sorted capture array and
+    EMIT its C(k,2) pairs directly (``_cell_pairs``), instead of
+    self-joining the table.
 
-    vs the self-join shape this replaces (guide §1.2 — fix the
-    algorithm before the constants): the join shuffled the table twice
-    (both aliased sides), built and probed a per-partition hash table
-    over millions of rows, and re-derived each line's pair set through
-    probe + struct(a) < struct(b) filtering; here ONE exchange groups
-    the line (complete-mode aggregate — the child repartition already
-    satisfies the distribution), and pair emission is pure codegen over
-    the array.  The sorted array makes the orientation globally
-    (h1, h2)-lexicographic — exactly the struct< canonicalization of
-    the join it replaces, so every downstream consumer (mask add,
-    part1/part2 dedup, restore) sees identical keys.  Line width is
-    bounded by HOT_LINE_K by construction, so the per-row explosion is
-    <= ~130k pairs — a streaming generate, never a task-melting hub
-    (those route through the mask/salt machinery before this runs)."""
+    One exchange groups the lines and pair emission is pure codegen
+    over the arrays, where a self-join would shuffle the table twice
+    and probe a hash table per row.  The sorted array makes the
+    orientation globally (h1, h2)-lexicographic, so every pair source
+    (cold lines, deep class) and consumer (mask add, the part1/part2
+    merge, restore) sees identical keys.
+
+    ``wide``: the (jv1, jv2) keys of the lines the caller's hot census
+    found wider than HOT_LINE_K (None: no line is).  They get the
+    reference's join-line rebalancing (``AssignJoinLineRebalancing.
+    scala:15-65``) in array form: a line is cut into b = ceil(k /
+    HOT_LINE_K) position blocks, and each block pair (p <= q) becomes a
+    cell repartitioned on (line, p, q) — a diagonal cell emits the
+    pairs inside its block, an off-diagonal cell every block-p ×
+    block-q pair.  Blocks of a sorted array are sorted and disjoint, so
+    every pair is emitted once, in the same orientation, and no task
+    emits more than HOT_LINE_K² pairs of one cell.  Every other line
+    emits in its grouping task, behind its one exchange.  The counts
+    are exact whatever ``wide`` holds: a narrow line in it is one
+    diagonal cell, and a wide line left out emits from one task."""
     n_pair = _pair_parallelism(capf)
-    lines = (
-        capf.select("jv1", "jv2", "h1", "h2")
-        .repartition(n_pair, "jv1", "jv2")
-        .groupBy("jv1", "jv2")
-        .agg(F.sort_array(F.collect_list(F.struct("h1", "h2"))).alias("caps"))
+    rows = capf.select(*JV, "h1", "h2")
+    if wide is not None:
+        wide = F.broadcast(wide.select(*JV))
+        blocked = _line_arrays(rows.join(wide, on=JV, how="left_semi"), n_pair)
+        rows = rows.join(wide, on=JV, how="left_anti")
+    narrow = (
+        _line_arrays(rows, n_pair)
         .filter(F.size("caps") >= 2)
-    )
-    pairs = lines.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(caps, (x, i) -> "
-                "transform(slice(caps, i + 2, size(caps) - 1 - i), y -> "
-                "named_struct('a_h1', x.h1, 'a_h2', x.h2, "
-                "'b_h1', y.h1, 'b_h2', y.h2))))"
-            )
-        ).alias("p")
-    ).select("p.*")
-    if sketches is not None:
-        pairs = _apply_sketch_filter(pairs, sketches)
-    pkey = ["a_h1", "a_h2", "b_h1", "b_h2"]
-    ov = (
-        pairs.select(*pkey)
-        .repartition(n_pair, *pkey)
-        .groupBy(*pkey)
-        .agg(F.count("*").alias("overlap"))
-    )
-    if min_overlap > 1:
-        ov = ov.filter(F.col("overlap") >= min_overlap)
-    return ov
-
-
-def _salted_pair_counts(
-    capf: DataFrame,
-    hot_values: list | DataFrame,
-    min_overlap: int,
-    sketches: DataFrame | None = None,
-) -> DataFrame:
-    """Pair overlap counts via the salted triangle self-join (see
-    capture_overlaps).  ``hot_values`` may be a driver-side list of
-    (jv1, jv2) tuples or a DataFrame with those columns (the mask-cap
-    overflow set, which is deliberately never collected)."""
-    if isinstance(hot_values, DataFrame):
-        hot_df = hot_values.select(*JV)
-    else:
-        hot_df = _hot_keys(capf, hot_values)
-    hot = hot_df.select(*JV, F.lit(True).alias("is_hot"))
-    # Cell (i, j), i <= j, joins bucket-i captures (side A) with
-    # bucket-j captures (side B): side A is replicated to cells (b,
-    # b..N-1), side B to cells (0..b, b).  Off-diagonal cells produce
-    # each unordered pair in exactly one orientation by construction
-    # (bucket is a pure function of the capture hash, so the
-    # orientation of a given pair is globally consistent); only
-    # diagonal cells need the a < b hash filter.  This halves both the
-    # join output and the replication factor vs. full-square salting.
-    # tb — the capture's *intrinsic* bucket, a pure function of its
-    # hash, computed for every row (hot or not).  Pair orientation is
-    # globally (tb, h1, h2)-lexicographic, so a pair co-occurring in
-    # both a hot and a cold line groups under the same key: in hot
-    # cross-bucket cells the lower-tb capture is side A by
-    # construction, and the explicit filter below enforces the same
-    # order in diagonal and cold cells.
-    salted = (
-        capf.join(F.broadcast(hot), on=["jv1", "jv2"], how="left")
-        .withColumn("tb", F.pmod(F.hash("h1", "h2"), F.lit(N_SALT)))
-        .withColumn(
-            "bucket", F.when(F.col("is_hot"), F.col("tb")).otherwise(F.lit(0))
+        .select(
+            F.col("caps").alias("left"),
+            F.col("caps").alias("right"),
+            F.lit(True).alias("diag"),
         )
     )
-    # Explicit repartition on the salted join key: (a) pins the task
-    # count of the pair-generation stage — AQE would otherwise coalesce
-    # it by *input* bytes (a few hundred MB) to a handful of tasks,
-    # blind to the k-squared join *output* behind each key; (b) both
-    # sides end up hash-partitioned identically, so the join needs no
-    # further exchange (colocated).
-    n_pair = _pair_parallelism(capf)
-    skey = ["jv1", "jv2", "ba", "bb"]
-    a = salted.select(
-        "jv1",
-        "jv2",
-        F.col("bucket").alias("ba"),
-        F.explode(
-            F.when(
-                F.col("is_hot"), F.sequence(F.col("bucket"), F.lit(N_SALT - 1))
-            ).otherwise(F.array(F.lit(0)))
-        ).alias("bb"),
-        F.col("tb").alias("a_tb"),
-        F.col("h1").alias("a_h1"),
-        F.col("h2").alias("a_h2"),
-    ).repartition(n_pair, *skey)
-    b = salted.select(
-        "jv1",
-        "jv2",
-        F.explode(
-            F.when(
-                F.col("is_hot"), F.sequence(F.lit(0), F.col("bucket"))
-            ).otherwise(F.array(F.lit(0)))
-        ).alias("ba"),
-        F.col("bucket").alias("bb"),
-        F.col("tb").alias("b_tb"),
-        F.col("h1").alias("b_h1"),
-        F.col("h2").alias("b_h2"),
-    ).repartition(n_pair, *skey)
-    # shuffle_hash hint: Catalyst's size estimate for the exploded capf
-    # relation is far below reality, so without the hint it broadcasts
-    # the whole side (driver-side hashed-relation build of the *entire*
-    # capture table — unusable at scale).
-    pairs = a.hint("shuffle_hash").join(b.hint("shuffle_hash"), on=skey).filter(
-        F.struct("a_tb", "a_h1", "a_h2") < F.struct("b_tb", "b_h1", "b_h2")
-    )
+    pairs = _cell_pairs(narrow)
+    if wide is not None:
+        last = F.expr(f"(size(caps) - 1) div {HOT_LINE_K}")
+
+        def block(c: str) -> Column:
+            return F.slice("caps", F.col(c) * HOT_LINE_K + 1, F.lit(HOT_LINE_K))
+
+        cells = (
+            blocked.select(*JV, "caps", F.explode(F.sequence(F.lit(0), last)).alias("p"))
+            .select(*JV, "caps", "p", F.explode(F.sequence(F.col("p"), last)).alias("q"))
+            .select(*JV, "p", "q", block("p").alias("left"), block("q").alias("right"))
+            .repartition(n_pair, *JV, "p", "q")
+            .select("left", "right", (F.col("p") == F.col("q")).alias("diag"))
+        )
+        pairs = pairs.unionByName(_cell_pairs(cells))
     if sketches is not None:
         pairs = _apply_sketch_filter(pairs, sketches)
     # Pair counting WITHOUT map-side partial aggregation: pair keys are
     # mostly unique (the long tail), so partial aggregation shuffles the
     # same row count anyway but first burns a full hash-map build +
-    # spill-sort per task (measured: 700M partial rows, 13 GB spill).
-    # Repartitioning by the pair key first makes the child partitioning
-    # satisfy the aggregation's distribution requirement, so Catalyst
-    # plans a single complete-mode HashAggregate.  The 4-integer key
-    # (supports re-attached by the restore joins below) keeps shuffle
-    # rows fixed-width and 28 bytes.
-    pkey = ["a_h1", "a_h2", "b_h1", "b_h2"]
+    # spill-sort per task.  Repartitioning by the pair key first makes
+    # the child partitioning satisfy the aggregation's distribution
+    # requirement, so Catalyst plans a single complete-mode
+    # HashAggregate over fixed-width 4-integer keys.
     ov = (
-        pairs.select(*pkey)
-        .repartition(n_pair, *pkey)
-        .groupBy(*pkey)
+        pairs.select(*PKEY)
+        .repartition(n_pair, *PKEY)
+        .groupBy(*PKEY)
         .agg(F.count("*").alias("overlap"))
     )
     if min_overlap > 1:
@@ -822,7 +751,8 @@ def remove_implied_cinds(cinds: DataFrame) -> DataFrame:
     in the logical plan — multi-megabyte plan trees that Catalyst
     re-analyzes and the driver re-stringifies per action.  The CIND set
     is result-sized (orders of magnitude smaller than the data), so
-    checkpointing stays cheap at any scale."""
+    checkpointing stays cheap at any scale.  The checkpointed input is
+    released once the (equally checkpointed) result exists."""
     cinds = materialize(cinds)
     all_cols = cinds.columns
     # The whole pass (6 probe expansions, 2 killer builds, a distinct,
@@ -847,7 +777,9 @@ def remove_implied_cinds(cinds: DataFrame) -> DataFrame:
         from rdfind_spark.util import capture_plan
 
         capture_plan("minimality", pinned)
-        return materialize(pinned)
+        out = materialize(pinned)
+    release(cinds)
+    return out
 
 
 def _remove_implied_pinned(cinds: DataFrame, all_cols: list) -> DataFrame:
@@ -1139,5 +1071,7 @@ def discover_cinds(
             cinds, association_rules(triples, min_support, 1.0)
         )
     if minimal:
+        # the minimal set is checkpointed, so the overlap table is dead
         cinds = remove_implied_cinds(cinds)
+        cands.unpersist()
     return cinds

@@ -125,7 +125,7 @@ def cind_zipf_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sources/skew.py``) has 43 join lines of ~760-1250 frequent
     captures at sf0.01 — past HOT_LINE_K=512 — plus 240 celebrity
     subjects living in 12+ hot lines, so the hot-mask decomposition
-    AND its deep-capture part-2 salted path (``cind.py:209``, the
+    AND its deep-capture part-2 path (``cind.py``, the
     engine's replacement for the reference's join-line rebalancing,
     ``operators/AssignJoinLineRebalancing.scala:15-65``) both run at
     their real thresholds inside a driver-checked three-check query,

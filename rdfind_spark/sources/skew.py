@@ -14,7 +14,7 @@ and ``programs/RDFind.scala:404-444``) carried only probe evidence
 This module gives the decomposition itself a registered three-check
 query: at sf0.01 the derived fixture's hub lines are ~760-1250 frequent
 captures wide (HOT_LINE_K = 512, so the mask path and the deep-capture
-part-2 salted path both engage at their REAL thresholds) while the
+part-2 path both engage at their REAL thresholds) while the
 DuckDB oracle runs the identical discovery relationally.
 
 The derivation, per order key ``s`` (dense 0..N-1, so every block
@@ -38,7 +38,7 @@ scales linearly with SF while celebrity/hub-line COUNTS stay fixed):
 * celebrities (s<240) (e:s, p:((s+k)%8),  h:k), k<12 — 240 subjects
   living in 12+ distinct hot lines: with min_support=10 these are
   exactly the "deep" capture class (mask popcount >= min_overlap)
-  whose pairs only the part-2 salted enumeration can recover.
+  whose pairs only the part-2 enumeration can recover.
 
 One spec, two renderings: the block table below is rendered to Spark
 (``selectExpr`` over ``orders`` × ``spark.range``) and to DuckDB SQL

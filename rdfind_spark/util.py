@@ -266,11 +266,11 @@ def salted_join(
 
     The CIND hot-line kernel joins its mask-cap overflow lines through
     it (operators/cind.py ``cold_line_join``, the staged engine's
-    evidence verify); the discovery pair count keeps its own salted
-    triangle self-join (``_salted_pair_counts``), which needs each
-    unordered pair once.  AQE's skew-join split handles moderate skew on
-    its own; explicit salting is for the regime where a single key
-    exceeds what one task can hold at all.  ``right`` is replicated
+    evidence verify); the discovery pair count does not salt, it cuts
+    wide join lines into position blocks (``_grouped_pair_counts``),
+    which emits each unordered pair once.  AQE's skew-join split
+    handles moderate skew on its own; explicit salting is for the
+    regime where a single key exceeds what one task can hold at all.  ``right`` is replicated
     ``salt``× — keep it the smaller side.
 
     Only inner/left joins are supported (for other types the replicated

@@ -66,8 +66,8 @@ def _session():
 def hot_census(triples, min_support: int = 10) -> dict:
     """The engine's own hot-line census, run standalone: how many join
     lines exceed HOT_LINE_K frequent captures, how many 64-bit mask
-    words they need, how many spill past MAX_HOT_MASK into the salted
-    overflow path, and the widths of the widest lines."""
+    words they need, how many spill past MAX_HOT_MASK into the
+    overflow (block-split) path, and the widths of the widest lines."""
     from pyspark.sql import functions as F
 
     from rdfind_spark.operators import cind as cind_mod
@@ -235,7 +235,7 @@ def ablate(tmp: str) -> int:
 def overflow(tmp: str) -> int:
     """Trip the mask-cap overflow path at its REAL threshold: ~5,200
     hot lines > MAX_HOT_MASK=4096, so the 4,096 hottest get bitmasks
-    and the remainder flows through the salted-join overflow branch.
+    and the remainder stays cold, block-split by the pair enumerator.
     Equivalence check: the same discovery with MAX_HOT_MASK raised past
     the line count (all lines masked, overflow branch dormant) must
     produce the identical overlap result — two genuinely different
@@ -290,7 +290,7 @@ def overflow(tmp: str) -> int:
         return 1
     print(
         f"# SUMMARY overflow: {census['n_overflow_lines']} lines past the "
-        f"mask cap handled by the salted branch; capped {dt_ov:.1f}s vs "
+        f"mask cap handled by the block split; capped {dt_ov:.1f}s vs "
         f"all-masked {dt_all:.1f}s; results identical "
         f"(rows + value hash)",
         flush=True,

@@ -46,7 +46,7 @@ DEPTH = dict(n_subj=200_000, n_values=200_000, n_celeb=400, n_hub=6)
 ABLATE = dict(n_subj=20_000, n_values=20_000, n_celeb=100, n_hub=6)
 # many-medium-hubs tier: ~4800 uniform hub values of mean width ~570 —
 # nearly every line hot, count past MAX_HOT_MASK=4096, so the mask-cap
-# overflow (salted) path runs at its REAL threshold.  n_hub=8 < the
+# overflow (block-split) path runs at its REAL threshold.  n_hub=8 < the
 # min_overlap of 10 keeps subject captures OUT of the deep class (the
 # first cut of this fixture used n_hub=36, which made all 100k subject
 # captures deep and degenerated part-2 into enumerating the entire

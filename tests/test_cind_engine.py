@@ -283,10 +283,80 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
     all_hot, no_overflow = cind_mod.hot_line_census(capf)
     assert len(all_hot) == n_hot and no_overflow is None
     monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
+    # the overlap table itself: 4 masked lines >= min_overlap 3, so the
+    # deep hot-only class merges with the cold pairs — one row per
+    # unordered pair, with the brute-force overlap
+    ov = cind_mod.capture_overlaps(capf, freq, min_overlap=3).collect()
+    side = lambda r, s: (r[f"{s}_code"], r[f"{s}_v1"], r[f"{s}_v2"])  # noqa: E731
+    got_ov = [(frozenset((side(r, "a"), side(r, "b"))), r.overlap) for r in ov]
+    assert len({pair for pair, _ in got_ov}) == len(got_ov)
+    capsets = {
+        c: vs for c, vs in brute_capture_sets(triples).items() if len(vs) >= 3
+    }
+    expected_ov = {
+        frozenset((a, b)): len(capsets[a] & capsets[b])
+        for a, b in itertools.combinations(capsets, 2)
+        if len(capsets[a] & capsets[b]) >= 3
+    }
+    assert dict(got_ov) == expected_ov
     for minimal in (False, True):
         expected = brute_cinds(triples, min_support=3, minimal=minimal)
         got = spark_cinds(spark, triples, min_support=3, minimal=minimal)
         assert got == expected, f"minimal={minimal}"
+
+
+def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch):
+    """The pair enumerator on its own, with HOT_LINE_K = 3: lines of
+    widths 1-10 hit the narrow path, exact block edges (3, 6) and
+    partial last blocks (4, 7, 10).  Counts equal a brute-force census
+    of every line's pairs, one row per unordered pair, each row
+    (h1, h2)-lex oriented — with the wide lines named as the census
+    names them, and equally with none or every line named."""
+    from collections import Counter
+
+    from rdfind_spark.operators import cind as cind_mod
+
+    monkeypatch.setattr(cind_mod, "HOT_LINE_K", 3)
+    rng = random.Random(5)
+    pool = sorted({(rng.randrange(-50, 50), rng.randrange(-3, 3)) for _ in range(14)})
+    rows = []
+    expected = Counter()
+    for line, width in enumerate((1, 2, 3, 4, 6, 7, 10, 10, 7)):
+        caps = rng.sample(pool, width)
+        rows += [(line, -line, h1, h2) for h1, h2 in caps]
+        expected.update(itertools.combinations(sorted(caps), 2))
+    capf = spark.createDataFrame(rows, "jv1 long, jv2 int, h1 long, h2 int")
+    widths = capf.groupBy("jv1", "jv2").count()
+    census = widths.filter("count > 3")
+    assert census.count() == 6
+    for wide in (census, None, widths):
+        got = cind_mod._grouped_pair_counts(capf, 1, wide=wide).collect()
+        keys = [((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)) for r in got]
+        assert len(set(keys)) == len(keys)
+        assert all(a < b for a, b in keys)
+        assert {k: r.overlap for k, r in zip(keys, got)} == dict(expected)
+    floor = cind_mod._grouped_pair_counts(capf, 3, wide=census).collect()
+    assert {((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)): r.overlap for r in floor} == {
+        k: n for k, n in expected.items() if n >= 3
+    }
+
+
+def test_hot_index_runs_no_python_worker(spark):
+    """The mask index is built from JVM literals: its plan has no
+    local-data (LogicalRDD) leaf, so no Python worker starts for it.
+    The key extremes round-trip exactly."""
+    from rdfind_spark.operators import cind as cind_mod
+
+    hot = [(-(2**62), -7), (3, 2**31 - 1), (5, 0), (-(2**63), -(2**31)), (2**63 - 1, 1)]
+    idx = cind_mod._hot_index(spark.range(1), hot)
+    leaves = idx._jdf.queryExecution().analyzed().collectLeaves()
+    names = [leaves.apply(i).getClass().getName() for i in range(leaves.size())]
+    assert not any(n.endswith(".LogicalRDD") for n in names), names
+    assert sorted(tuple(r) for r in idx.collect()) == sorted(
+        (a, b, i) for i, (a, b) in enumerate(hot)
+    )
+    assert idx.schema.simpleString() == "struct<jv1:bigint,jv2:int,idx:int>"
+    assert cind_mod._hot_index(spark.range(1), []).count() == 0
 
 
 def test_duplicate_triples_do_not_change_result(spark):

@@ -183,16 +183,15 @@ def test_cind_zipf_skew_query_matches_oracle_and_mask_path_agrees(
 
 
 def test_overlap_table_unique_per_unordered_pair(spark, sf_dir, monkeypatch):
-    """Regression (r11): part1 (hash-lex orientation from the cold
-    join) and part2 (the deep hot-only class, (tb, hash)-lex from the
-    salted triangle join) can emit the SAME unordered pair in opposite
-    orientations; before the normalize-before-dropDuplicates fix in
-    ``_cold_pair_counts_with_hot_masks`` the overlap table kept both
-    rows (1,818 duplicate pairs observed on the sf0.01 zipf fixture).
-    Pin: with HOT_LINE_K forced low enough that the deep part-2 class
-    populates (the same config the parity test above proves engages
-    it), every unordered pair appears exactly once, in hash-lex
-    orientation."""
+    """Regression (r11): the overlap table once kept 1,818 duplicate
+    pairs on the sf0.01 zipf fixture, because its part1 (cold pairs)
+    and part2 (the deep hot-only class) came from enumerators with
+    opposite pair orientations.  Both parts now come from the one
+    sorted-array enumerator, and ``_cold_pair_counts_with_hot_masks``
+    merges them with one max per pair.  Pin: with HOT_LINE_K forced
+    low enough that the deep part-2 class populates (the same config
+    the parity test above proves engages it), every unordered pair
+    appears exactly once, in hash-lex orientation."""
     from rdfind_spark.operators import cind as cind_mod
     from rdfind_spark.operators.cind import build_capture_tables
     from rdfind_spark.sources.skew import zipf_triples
