@@ -833,32 +833,49 @@ def _remove_implied_pinned(cinds: DataFrame, all_cols: list) -> DataFrame:
     return cinds.join(bad, on=all_cols, how="left_anti")
 
 
+def _hashed_instances(cand: DataFrame) -> DataFrame:
+    """(jv1, jv2, h1, h2): each capture candidate as the 96-bit hashes of
+    its join value and of its capture key (see ``_with_capture_hash``)."""
+    return cand.select(
+        F.xxhash64("join_value").alias("jv1"),
+        F.hash("join_value").alias("jv2"),
+        F.xxhash64(*CAPTURE_KEY).alias("h1"),
+        F.hash(*CAPTURE_KEY).alias("h2"),
+    )
+
+
+def _frequent_strings(cand: DataFrame, freq_h: DataFrame) -> DataFrame:
+    """(code, v1, v2, support) of the (result-sized) hash-keyed frequent
+    captures ``freq_h``, their strings recovered with one more streaming
+    pass over the raw candidates — a broadcast semi-restriction plus a
+    partial-aggregated dedup: no wide shuffle touches strings.
+
+    The dedup is a group-by-all-columns distinct, NOT first()-aggregates
+    keyed on the hashes: a first() over a string column carries a
+    var-length aggregation buffer, which HashAggregate cannot hold, so
+    Catalyst silently planned SortAggregate — both aggregation passes
+    were sorting the full restricted stream (r11 plan audit; guide §1.2
+    "per-task work").  Group keys may be strings, so the distinct
+    hash-aggregates, with at most one row per capture per partition on
+    the shuffle.  ((code, v1, v2) determines support through freq_h, so
+    the result is one row per capture.)"""
+    return (
+        _with_capture_hash(cand.select(*CAPTURE_KEY))
+        .join(F.broadcast(freq_h), on=["h1", "h2"])
+        .select(*CAPTURE_KEY, "support")
+        .distinct()
+    )
+
+
 def build_capture_tables(
     triples: DataFrame,
     min_support: int = 10,
     projection: str | None = None,
-    with_capf: bool = True,
-    defer_frequent: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The shared hashed-prefix pipeline of every CIND engine entry:
     returns ``(cand, dcap_h, freq_h, frequent, capf)`` with the last
-    four PERSISTED (MEMORY_AND_DISK) and built eagerly in dependency
-    order.  Callers unpersist what they took when done.
-
-    ``defer_frequent``: kick the ``frequent`` string-recovery build (a
-    full second scan of the raw candidates, ~10s at sf0.1 — the single
-    most expensive prefix phase) into a background thread instead of
-    blocking on it.  The caller's next eager jobs (hot-line census,
-    sketch builds — none of which read ``frequent``) then overlap the
-    scan; the first job that DOES read it synchronizes naturally via
-    the block manager's per-block locks (concurrent materialization of
-    a persisted table is coordinated, not duplicated).  Callers still
-    consume ``frequent`` before unpersisting it, so the thread can
-    never outlive the table.
-
-    ``with_capf=False`` skips the capf build (and returns ``None`` in
-    its slot) for consumers that only need the support counts — e.g.
-    the ``capture_supports`` query, which stops at ``frequent``.
+    four PERSISTED (MEMORY_AND_DISK).  Callers unpersist what they took
+    when done.
 
     The whole bulk pipeline (distinct, support counts, pair join) runs
     on 96-bit hashes of BOTH the join value and the capture key:
@@ -868,21 +885,18 @@ def build_capture_tables(
     This is the reference's dictionary compression (T7-T9,
     ``operators/ConditionCompressor.scala``) applied wholesale.
 
-    Eager count()s build the stacked caches in dependency order:
-    leaving them lazy lets the first downstream job's AQE materialize
-    the TableCacheQueryStages CONCURRENTLY, and since each cache's
-    build plan contains the previous cache, the builds can
-    circular-wait — a race-dependent driver deadlock (observed)."""
+    Build order: ``dcap_h.count()``, then ``capf.count()``, which also
+    builds ``freq_h``; ``frequent`` stays lazy and its first reader
+    builds it.  Leaving stacked caches lazy lets the first downstream
+    job's AQE materialize the TableCacheQueryStages CONCURRENTLY, and
+    when one cache's build plan contains another unbuilt cache, the
+    builds can circular-wait — a race-dependent driver deadlock
+    (observed).  After the two counts ``frequent`` is the only unbuilt
+    cache, and its plan reads no other unbuilt one."""
     cand = capture_candidates(triples, projection)
     if os.environ.get("RDFIND_SPARK_CHECK_HASHES"):
         assert_hash_injective(cand)
-    caph = cand.select(
-        F.xxhash64("join_value").alias("jv1"),
-        F.hash("join_value").alias("jv2"),
-        F.xxhash64("code", "v1", "v2").alias("h1"),
-        F.hash("code", "v1", "v2").alias("h2"),
-    )
-    dcap_h = caph.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    dcap_h = _hashed_instances(cand).distinct().persist(StorageLevel.MEMORY_AND_DISK)
     dcap_h.count()
     freq_h = (
         dcap_h.groupBy("h1", "h2")
@@ -890,59 +904,13 @@ def build_capture_tables(
         .filter(F.col("support") >= min_support)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Recover the strings of the (result-sized) frequent captures with
-    # one more streaming pass over the raw candidates — a broadcast
-    # semi-restriction plus a partial-aggregated dedup: no wide
-    # shuffle touches strings.  The dedup is a group-by-all-columns
-    # distinct, NOT first()-aggregates keyed on the hashes: a first()
-    # over a string column carries a var-length aggregation buffer,
-    # which HashAggregate cannot hold, so Catalyst silently planned
-    # SortAggregate — both aggregation passes were sorting the full
-    # restricted stream (r11 plan audit; guide §1.2 "per-task work").
-    # Group keys may be strings, so the distinct hash-aggregates, with
-    # the same <=1-row-per-capture-per-partition partial-agg shuffle.
-    # ((code, v1, v2) determines support through freq_h, so this is
-    # one row per capture, exactly as before.)
-    frequent = (
-        cand.select(
-            "code",
-            "v1",
-            "v2",
-            F.xxhash64("code", "v1", "v2").alias("h1"),
-            F.hash("code", "v1", "v2").alias("h2"),
-        )
-        .join(F.broadcast(freq_h), on=["h1", "h2"])
-        .select(*CAPTURE_KEY, "support")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if not with_capf:
-        frequent.count()
-        return cand, dcap_h, freq_h, frequent, None
+    frequent = _frequent_strings(cand, freq_h).persist(StorageLevel.MEMORY_AND_DISK)
     capf = (
         dcap_h.join(F.broadcast(freq_h), on=["h1", "h2"])
         .select("jv1", "jv2", "h1", "h2", "support")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # frequent and capf are independent consumers of the two caches
-    # materialized ABOVE (frequent scans the raw candidates, capf reads
-    # dcap_h) — build them concurrently from two driver threads.  The
-    # AQE cache-deadlock in the docstring needs a cache whose build plan
-    # CONTAINS another still-unbuilt cache; here both inputs are already
-    # built, so the two jobs share nothing unmaterialized.
-    import concurrent.futures
-
-    if defer_frequent:
-        import threading
-
-        threading.Thread(target=frequent.count, daemon=True).start()
-        capf.count()
-        return cand, dcap_h, freq_h, frequent, capf
-    with concurrent.futures.ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(frequent.count)
-        f2 = pool.submit(capf.count)
-        f1.result()
-        f2.result()
+    capf.count()
     return cand, dcap_h, freq_h, frequent, capf
 
 
@@ -978,29 +946,13 @@ def frequent_capture_supports(
     aggregates under count, hiding the string cost.)
     """
     cand = capture_candidates(triples, projection)
-    caph = cand.select(
-        F.xxhash64("join_value").alias("jv1"),
-        F.hash("join_value").alias("jv2"),
-        F.xxhash64("code", "v1", "v2").alias("h1"),
-        F.hash("code", "v1", "v2").alias("h2"),
-    )
     freq_h = (
-        caph.groupBy("h1", "h2")
+        _hashed_instances(cand)
+        .groupBy("h1", "h2")
         .agg(F.count_distinct("jv1", "jv2").alias("support"))
         .filter(F.col("support") >= min_support)
     )
-    return (
-        cand.select(
-            "code",
-            "v1",
-            "v2",
-            F.xxhash64("code", "v1", "v2").alias("h1"),
-            F.hash("code", "v1", "v2").alias("h2"),
-        )
-        .join(F.broadcast(freq_h), on=["h1", "h2"])
-        .select(*CAPTURE_KEY, "support")
-        .distinct()
-    )
+    return _frequent_strings(cand, freq_h)
 
 
 def discover_cinds(
@@ -1027,11 +979,8 @@ def discover_cinds(
     exact count verifies the survivors — same exact result set (the
     sketch test has false positives only, like the reference's Bloom
     round)."""
-    # defer_frequent: the string-recovery scan overlaps the hot-line
-    # census inside capture_overlaps (and the sketch build, when on) —
-    # neither touches the string table.
     cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
-        triples, min_support, projection, defer_frequent=True
+        triples, min_support, projection
     )
     # sketches are result-sized (#frequent × 44 B) and feed two
     # broadcast builds per pair enumerator — materialize once with

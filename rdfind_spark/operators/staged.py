@@ -20,8 +20,9 @@ to the candidate captures* — the Spark-native replacement for the
 reference's broadcast candidate Bloom filters (exact, no false
 positives; SURVEY §4).  Hub join lines are handled by the hot-line
 kernel of ``operators.cind``: one census of the capture table feeds
-both the stage-1 pair join (``capture_overlaps``) and the evidence
-join, which share one mask table.
+both the stage-1 pair join (``capture_overlaps``, which masks its unary
+captures) and the evidence join (which masks the full capture table,
+and only when its hub gate rejects the plain join).
 
 Equivalence contract: after the minimality pass, the staged result
 equals ``discover_cinds(minimal=True)`` — the reference implicitly
@@ -37,7 +38,7 @@ output, orders of magnitude below the data), so the semi-join
 restrictions broadcast; the evidence join is an equi-join on
 ``join_value`` over the *restricted* capture tables — strictly smaller
 than the all-at-once pair join.  The one quadratic stage (1/1) runs on
-the shared hot-line/salting machinery.
+the all-at-once engine's pair enumerator and hot-line masks.
 
 Cost structure vs the all-at-once plan: both pay the same shared
 prefix (``build_capture_tables``) and hot-line census.  The staged plan
@@ -53,8 +54,6 @@ checkpoint-truncated).  ``perfbench/run.py --workload tpch_staged
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -73,25 +72,6 @@ from rdfind_spark.operators.cind import (
     remove_implied_cinds,
     structural_implies,
 )
-
-def _materialize(df: DataFrame, label: str = "") -> DataFrame:
-    """Eagerly compute a result-sized stage output and TRUNCATE its
-    lineage (``localCheckpoint``).  Each staged-lattice stage references
-    earlier stages several times (self-joins, probe/killer expansions);
-    with lazy persist the *logical plan* still nests exponentially and
-    the driver OOMs just stringifying it for the SQL UI.  Checkpointing
-    stage outputs keeps every plan stage-local — the staged strategy is
-    inherently a sequence of materialized jobs in the reference too.
-
-    Set ``SPARK_GRAFT_STAGE_TIMING=1`` to print per-stage wall clock."""
-    import time
-
-    t0 = time.time()
-    out = materialize(df)
-    if label and os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"## stage {label}: {time.time() - t0:.1f}s", flush=True)
-    return out
-
 
 _DEP_KEY = ["dep_code", "dep_v1", "dep_v2"]
 _REF_KEY = ["ref_code", "ref_v1", "ref_v2"]
@@ -174,7 +154,6 @@ def _verify_candidates(
     caps: DataFrame,
     cands: DataFrame,
     hot_values: list,
-    hot_masks: DataFrame | None,
     supports: DataFrame,
     hot_overflow: DataFrame | None,
 ) -> DataFrame:
@@ -204,13 +183,14 @@ def _verify_candidates(
     key) would still blow up the join, so they go through the hot-line
     kernel of ``operators.cind``: unlike discovery, verification KNOWS
     its pairs up front, so a hot line's contribution to every candidate
-    pair is read off the caller's full-line mask table
+    pair is read off a full-line mask table over ``caps``, built here
+    only when the gate below rejects the plain join
     (``hot_line_overlap``) — linear in candidates, the hub product never
     materializes.  The remaining lines, including the census overflow
     past the mask cap, are counted by ``cold_line_join``.  Always
     exact: mask values depend only on (capture, hot line set), and the
     full-line census is a superset of any restricted side's hot set."""
-    ch = _materialize(
+    ch = materialize(
         _support_pruned(cands.select(*_CIND_KEY).distinct(), supports),
         "cand:12+21+22",
     )
@@ -226,8 +206,6 @@ def _verify_candidates(
         F.count_distinct("ref_h1", "ref_h2").alias("nr"),
     ).collect()[0]
     plain = line_product_is_safe(_g.nd, _g.nr)
-    if os.environ.get("SPARK_GRAFT_STAGE_TIMING"):
-        print(f"## gate 12+21+22: n_dep={_g.nd} n_ref={_g.nr} plain={plain}", flush=True)
     pair_keys = ch.select(*_PAIR_H)
     a = caps.join(
         F.broadcast(ch.select(F.col("dep_h1").alias("h1"), F.col("dep_h2").alias("h2")).distinct()),
@@ -272,9 +250,10 @@ def _verify_candidates(
         .groupBy(*_PAIR_H)
         .agg(F.count("*").alias("cold_overlap"))
     )
-    # the shared mask table is keyed by capture hash, renamed per side
+    # the full-line mask table is keyed by capture hash, renamed per side
     # (captures outside the restriction are never probed — pair_keys
     # drives the joins)
+    hot_masks = materialize(hot_line_masks(caps, hot_values), "hot_masks")
     return _restore(
         pair_keys.join(F.broadcast(masks_as(hot_masks, "dep")), on=_DEP_H, how="left")
         .join(F.broadcast(masks_as(hot_masks, "ref")), on=_REF_H, how="left")
@@ -459,35 +438,18 @@ def discover_cinds_staged(
     # support counts / every verify join move only 96-bit hash pairs;
     # capture strings are restored once for the result-sized frequent
     # set, and candidate strings live only in the lattice tables.
-    # defer_frequent: the string-recovery scan overlaps the hot census
-    # below (frequent's first reader is stage 1's restore join)
     _cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
-        triples, min_support, projection, defer_frequent=True
+        triples, min_support, projection
     )
     # ONE full-line hot census (the kernel's bounded collect) shared by
     # the stage-1 pair join and the evidence join — a superset of any
     # restricted side's hot set, and the decomposition is exact for any
-    # hot set — plus ONE capture→hot-line mask table for both.
+    # hot set.
     hot_values, hot_overflow = hot_line_census(capf)
     if hot_overflow is not None:
         # checkpoint: consumed by both the pair stage and the evidence
         # join, which would otherwise re-run the census aggregate
-        hot_overflow = _materialize(hot_overflow, "hot_overflow")
-
-    # The mask table is consumed first by the evidence join — three
-    # stages from now — so its aggregate runs in a background thread,
-    # overlapping stage 1's pair join (Spark schedules jobs from
-    # concurrent driver threads independently; the .result() below is
-    # the synchronization point).
-    def _masks() -> DataFrame | None:
-        if not hot_values:
-            return None
-        return _materialize(hot_line_masks(capf, hot_values), "hot_masks")
-
-    import concurrent.futures
-
-    _bg = concurrent.futures.ThreadPoolExecutor(max_workers=1)
-    _mask_fut = _bg.submit(_masks)
+        hot_overflow = materialize(hot_overflow, "hot_overflow")
     freq_u = frequent.filter(F.col("code").isin(list(cc.VALID_UNARY_CODES)))
 
     def _keys_of(freq_subset: DataFrame) -> DataFrame:
@@ -509,7 +471,7 @@ def discover_cinds_staged(
         hot_values=hot_values,
         hot_overflow=hot_overflow,
     )
-    ov_uu = _materialize(ov_uu.coalesce(spark.sparkContext.defaultParallelism), "ov_uu")
+    ov_uu = materialize(ov_uu.coalesce(spark.sparkContext.defaultParallelism), "ov_uu")
 
     # ONE directional pass over the materialized overlap table builds
     # BOTH stage-1 classes (1/1 CINDs and proper overlaps, both
@@ -530,7 +492,7 @@ def discover_cinds_staged(
             (F.col("overlap") == F.col(f"{dep}_support")).alias("is_cind"),
         )
 
-    partners = _materialize(
+    partners = materialize(
         _dir_rows("a", "b").unionByName(_dir_rows("b", "a")), "partners"
     )
     cind11 = partners.filter("is_cind").select(*_CIND_KEY, "support")
@@ -540,7 +502,7 @@ def discover_cinds_staged(
             filter_ar_implied_cinds,
         )
 
-        cind11 = _materialize(
+        cind11 = materialize(
             filter_ar_implied_cinds(
                 cind11, association_rules(triples, min_support, 1.0)
             ),
@@ -609,7 +571,7 @@ def discover_cinds_staged(
         F.col("v1").alias("dep_v1"),
         F.col("v2").alias("dep_v2"),
     )
-    cand21 = _materialize(
+    cand21 = materialize(
         _merged_dep_candidates(partners.select(*_CIND_KEY, "is_cind"), freq_bdep),
         "cand:21",
     )
@@ -631,7 +593,7 @@ def discover_cinds_staged(
     # verifies all three classes (the second _verify_candidates call —
     # measured 3.7-7.7s of fixed cost for a 4-candidate class at
     # sf0.1 — and the all21 barrier disappear from the serial chain).
-    all21_seed = _materialize(
+    all21_seed = materialize(
         _support_pruned(cand21.select(*_CIND_KEY).distinct(), freq_h)
         .select(*_CIND_KEY),
         "all21_seed",
@@ -673,8 +635,6 @@ def discover_cinds_staged(
             F.col("r2_v1").alias("ref_v2"),
         )
     )
-    hot_masks = _mask_fut.result()
-    _bg.shutdown()
 
     # ---- ONE combined evidence join for the 1/2 + 2/1 + 2/2 candidate
     # classes: all three are known before any verification (the 2/2
@@ -687,13 +647,12 @@ def discover_cinds_staged(
     # split back by dep/ref arity, which determines the class uniquely.
     unary_dep = F.col("dep_code").isin(list(cc.VALID_UNARY_CODES))
     unary_ref = F.col("ref_code").isin(list(cc.VALID_UNARY_CODES))
-    verified = _materialize(
+    verified = materialize(
         _verify_candidates(
             capf,
             cand12.unionByName(cand21.filter("exact").select(*_CIND_KEY))
             .unionByName(cand22),
             hot_values,
-            hot_masks,
             freq_h,
             hot_overflow,
         ),

@@ -165,10 +165,8 @@ def capture_overlaps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct this used before measured ~20s slower at sf0.1)."""
     from rdfind_spark.operators.cind import build_capture_tables
 
-    # defer_frequent: the string-recovery scan overlaps the eager
-    # hot-line census inside capture_overlaps
     _, _, _, frequent, capf = build_capture_tables(
-        triple_view(spark, sf_dir), MIN_SUPPORT, defer_frequent=True
+        triple_view(spark, sf_dir), MIN_SUPPORT
     )
     return capture_overlaps(capf, frequent, min_overlap=MIN_SUPPORT)
 

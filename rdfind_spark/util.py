@@ -78,10 +78,19 @@ def null_sensitive_cmp(a, b) -> int:
     return (a > b) - (a < b)
 
 
-def materialize(df, eager: bool = True):
+def materialize(df, label: str = ""):
     """Cut lineage and pin ``df``'s current result — the engine's one
     stage-materialization primitive (iterative loops, staged lattices,
-    reused sketch tables all go through here).
+    reused sketch tables all go through here).  Each staged-lattice
+    stage references earlier stages several times (self-joins,
+    probe/killer expansions); with a lazy persist the *logical plan*
+    still nests exponentially and the driver runs out of memory just
+    stringifying it for the SQL UI, so stage outputs are checkpointed.
+
+    ``label`` names the stage output: when non-empty it is the Spark job
+    description of the jobs that build it, so the output is named in
+    the UI and the event log; the caller's description is restored
+    afterwards.
 
     Default mode is ``localCheckpoint``: blocks live in executor-local
     storage, no reliable-store round-trip, fastest — but NOT
@@ -103,11 +112,16 @@ def materialize(df, eager: bool = True):
     import os
 
     spark = df.sparkSession
-    cdir = spark.conf.get(
-        "spark.rdfind.checkpointDir", os.environ.get("RDFIND_CHECKPOINT_DIR")
-    )
-    if cdir:
-        sc = spark.sparkContext
+    sc = spark.sparkContext
+    if label:
+        previous = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(label)
+    try:
+        cdir = spark.conf.get(
+            "spark.rdfind.checkpointDir", os.environ.get("RDFIND_CHECKPOINT_DIR")
+        )
+        if not cdir:
+            return df.localCheckpoint(eager=True)
         # setCheckpointDir once per session (idempotent target dir)
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(cdir)
@@ -117,19 +131,14 @@ def materialize(df, eager: bool = True):
         # at sf0.1 (scripts/ckpt_probe.py, README table): +49% vs local
         # mode unpersisted; after this persist the same alternating
         # probe shows reliable mode within noise of local mode.  Blocks
-        # are released as soon as the checkpoint files exist.  The
-        # persist only pays off when WE trigger the write (eager) and
-        # can unpersist right after; on a lazy checkpoint the write
-        # happens at some future action and a persist here would leak
-        # cached blocks forever — so the lazy reliable path skips the
-        # persist and accepts the documented one-time recompute.
-        if not eager:
-            return df.checkpoint(eager=False)
+        # are released as soon as the checkpoint files exist.
         df = df.persist()
         out = df.checkpoint(eager=True)
         df.unpersist(False)
         return out
-    return df.localCheckpoint(eager=eager)
+    finally:
+        if label:
+            sc.setLocalProperty("spark.job.description", previous)
 
 
 # Plan-capture hook (introspection only, default off): eagerly-executed

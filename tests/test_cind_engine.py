@@ -359,6 +359,47 @@ def test_hot_index_runs_no_python_worker(spark):
     assert cind_mod._hot_index(spark.range(1), []).count() == 0
 
 
+def test_engine_jobs_stay_on_callers_thread(spark, monkeypatch):
+    """Both engines submit every Spark job from the caller's thread, so
+    each job carries the caller's local properties: a job group set
+    around a discovery covers all of its jobs, and no job lands outside
+    a group.  The fixture is the staged overflow test's (HOT_LINE_K=2,
+    MAX_HOT_MASK=4): census, masks, overflow, the deep class and the
+    non-plain verify all run."""
+    from rdfind_spark.operators import cind as cind_mod
+    from rdfind_spark.operators.staged import discover_cinds_staged
+
+    monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
+    monkeypatch.setattr(cind_mod, "N_SALT", 4)
+    monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
+    rng = random.Random(11)
+    triples = list(
+        {
+            (
+                f"s{rng.randrange(8)}",
+                f"p{rng.randrange(3)}",
+                f"o{rng.randrange(5)}",
+            )
+            for _ in range(300)
+        }
+    )
+    df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for discover in (discover_cinds, discover_cinds_staged):
+        group = f"caller-thread-{discover.__name__}"
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "discovery on the caller's thread")
+        try:
+            assert discover(df, min_support=3).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        assert tracker.getJobIdsForGroup(group)
+        assert not escaped, f"{discover.__name__}: jobs {sorted(escaped)} ran without the group"
+
+
 def test_duplicate_triples_do_not_change_result(spark):
     dup = TINY + TINY[:7]
     assert spark_cinds(spark, dup, 2) == brute_cinds(TINY, 2)

@@ -80,6 +80,26 @@ def test_salted_join_matches_plain_join(spark):
     assert pl == sl == 6000
 
 
+def test_materialize_label_is_the_job_description(spark):
+    """materialize(df, label) runs the jobs that build df under the job
+    description ``label`` and restores the caller's description."""
+    from rdfind_spark.util import materialize
+
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize-label", "outer")
+    try:
+        out = materialize(spark.range(0, 10).selectExpr("id * 2 AS v"), "stage:v")
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out.count() == 10
+    ids = sc.statusTracker().getJobIdsForGroup("materialize-label")
+    store = sc._jsc.sc().statusStore()
+    assert ids
+    assert {store.job(j).description().get() for j in ids} == {"stage:v"}
+
+
 def test_materialize_reliable_checkpoint_mode(spark, tmp_path):
     """materialize() defaults to localCheckpoint; with
     spark.rdfind.checkpointDir set it writes reliable checkpoints to
