@@ -3,7 +3,9 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (unset: the cores this process may run on),
+in the session profile of ``rdfind_spark.session``, and prints ONE JSON
+line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -223,47 +225,17 @@ def format_result(
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from rdfind_spark.session import drop_cached, spark_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("rdfind-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # Generated-class retention across the ~47-query session (r11
-        # optimization round, guide §1/§7): the codegen class cache is
-        # 100 entries by DEFAULT, so by query ~40 the classes the
-        # warmup (and the early heavies) JIT-compiled have been evicted
-        # and late queries re-pay janino compilation + full C2 warmup
-        # ON TIMED DATA — measured: cind_zipf_skew 271.7s as bench
-        # query #43 vs 65.7s as query #7 of a short session on the same
-        # tree (same machine, same hour).  Session-lifetime retention
-        # (not per-query state) is also how a long-lived cluster app
-        # behaves; both knobs are data-scale-independent.
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        # Default 240 MB of JIT code cache silently flushes compiled
-        # code under the same churn (UseCodeCacheFlushing prints no
-        # warning); give the 47-query session room to keep hot code.
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("rdfind-spark-bench")
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     # Warmup: touch every input once (OS page cache), then run each
     # benched query at sf0.001 (untimed).  The tiny run executes the
@@ -271,9 +243,7 @@ def main() -> int:
     # JIT before anything is timed — measured: the first cold heavy
     # query otherwise pays 60-90s of JIT alone (cind_minimal 152s cold
     # vs 47s after a 27s sf0.001 warmup), which would be measured as
-    # query time.  (events.parquet may be TIMESTAMP(NANOS); without the
-    # conf the warmup read would throw and silently skip the file.)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # query time.
     for t in ("lineitem", "orders", "customer", "documents", "embeddings", "events"):
         try:
             spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
@@ -281,28 +251,6 @@ def main() -> int:
             pass
 
     queries = entry.queries()
-
-    def _drop_leftover_cache() -> None:
-        # Queries that persist intermediates (the CIND engines persist
-        # shared capture tables) release them on their own hot path,
-        # but anything still cached after a query returns would eat
-        # executor memory and poison the NEXT measurement (observed:
-        # capture_supports 1.3s → 14s when run after a query that
-        # leaked its persisted prefix).  Cleanup runs OUTSIDE the
-        # timers: each query still pays its own cache builds.
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        # Broadcast and localCheckpoint blocks are reclaimed by the
-        # ContextCleaner only after a driver GC notices the dropped
-        # references; in a 25-query session the lag measurably slows
-        # later queries (heavy queries ran ~2x their isolated time by
-        # mid-bench).  Force the GC between timed queries.
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
 
     # Untimed warmup (guide §1: measure the computation, not JIT).
     # Through round 10 only the three heavy CIND queries warmed, on the
@@ -361,8 +309,8 @@ def main() -> int:
         # each other's pinned value and leave the session conf wrong
         # after the pool drains.  Hard-reset it to the session value
         # before anything is timed.
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(cpus) * 4))
-        _drop_leftover_cache()
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        drop_cached(spark)
         print(f"# warmup (sf0.001 + zipf@sf0.01, untimed): {time.time() - t0:.1f}s",
               file=sys.stderr)
 
@@ -394,7 +342,7 @@ def main() -> int:
         df = queries[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         elapsed = round(time.time() - t0, 3)
-        _drop_leftover_cache()
+        drop_cached(spark)
         return elapsed
 
     for name in BENCH_QUERIES:

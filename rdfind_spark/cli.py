@@ -56,24 +56,21 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rdfind_spark.session import spark_session
+
 
 def _build_session(args: argparse.Namespace) -> SparkSession:
-    builder = (
-        SparkSession.builder.master(args.master)
-        .appName("rdfind-spark")
-        .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-    )
     # In local mode the driver JVM IS the executor: Spark's 1g default
     # heap GC-thrashes on real inputs (measured: GCLocker retry
-    # warnings at sf0.1 ingest).  A cluster deployment sizes executors
-    # externally and can ignore this flag.
-    if getattr(args, "driver_memory", None):
-        builder = builder.config("spark.driver.memory", args.driver_memory)
-    return builder.getOrCreate()
+    # warnings at sf0.1 ingest), so ``--driver-memory`` sizes it.  A
+    # cluster deployment sizes executors externally and can omit it.
+    return spark_session(
+        "rdfind-spark",
+        master=args.master,
+        shuffle_partitions=args.shuffle_partitions,
+        driver_memory=getattr(args, "driver_memory", None),
+        ui=True,
+    )
 
 
 def _load_triples(

@@ -87,18 +87,19 @@ def frequent_captures(supports: DataFrame, min_support: int) -> DataFrame:
     return supports.filter(F.col("support") >= min_support)
 
 
-def _with_capture_hash(df: DataFrame) -> DataFrame:
-    """Attach a 96-bit capture id (h1: xxhash64, h2: murmur3) — the
-    relational form of the reference's dictionary compression
-    (``operators/ConditionCompressor.scala:13-35``): the quadratic pair
-    stage runs on fixed-width integer keys instead of long URI strings.
-    96 bits make a silent collision negligible (~n²/2⁹⁷); see the
-    collision census in tests."""
-    return df.select(
-        "*",
-        F.xxhash64("code", "v1", "v2").alias("h1"),
-        F.hash("code", "v1", "v2").alias("h2"),
-    )
+def capture_hash(prefix: str = "") -> list[Column]:
+    """The 96-bit capture id of the ``<prefix>code``, ``<prefix>v1``,
+    ``<prefix>v2`` columns as ``<prefix>h1`` (xxhash64) and
+    ``<prefix>h2`` (murmur3) — the relational form of the reference's
+    dictionary compression (``operators/ConditionCompressor.scala:
+    13-35``): the quadratic pair stage runs on fixed-width integer keys
+    instead of long URI strings.  96 bits make a silent collision
+    negligible (~n²/2⁹⁷); see the collision census in tests."""
+    key = [prefix + c for c in CAPTURE_KEY]
+    return [
+        F.xxhash64(*key).alias(prefix + "h1"),
+        F.hash(*key).alias(prefix + "h2"),
+    ]
 
 
 def assert_hash_injective(cand: DataFrame) -> None:
@@ -143,7 +144,7 @@ def pruned_captures(dcap: DataFrame, frequent: DataFrame) -> DataFrame:
     bulk ``dcap`` side is never shuffled here (the reference ships the
     same information as a broadcast Bloom filter,
     ``programs/RDFind.scala:374-399``)."""
-    fh = _with_capture_hash(frequent).select(*CAPTURE_KEY, "support", "h1", "h2")
+    fh = frequent.select(*CAPTURE_KEY, "support", *capture_hash())
     return dcap.join(F.broadcast(fh), on=CAPTURE_KEY).select(
         F.xxhash64("join_value").alias("jv1"),
         F.hash("join_value").alias("jv2"),
@@ -643,7 +644,7 @@ def _restore_capture_keys(ov: DataFrame, frequent: DataFrame) -> DataFrame:
     """Replace hashed pair keys by the capture keys + supports
     (result-sized broadcast joins), canonicalizing each pair to a < b by
     capture key (hash order is internal)."""
-    fh = _with_capture_hash(frequent)
+    fh = frequent.select("*", *capture_hash())
     fa = fh.select(
         F.col("h1").alias("a_h1"),
         F.col("h2").alias("a_h2"),
@@ -835,12 +836,11 @@ def _remove_implied_pinned(cinds: DataFrame, all_cols: list) -> DataFrame:
 
 def _hashed_instances(cand: DataFrame) -> DataFrame:
     """(jv1, jv2, h1, h2): each capture candidate as the 96-bit hashes of
-    its join value and of its capture key (see ``_with_capture_hash``)."""
+    its join value and of its capture key (see ``capture_hash``)."""
     return cand.select(
         F.xxhash64("join_value").alias("jv1"),
         F.hash("join_value").alias("jv2"),
-        F.xxhash64(*CAPTURE_KEY).alias("h1"),
-        F.hash(*CAPTURE_KEY).alias("h2"),
+        *capture_hash(),
     )
 
 
@@ -860,7 +860,7 @@ def _frequent_strings(cand: DataFrame, freq_h: DataFrame) -> DataFrame:
     the shuffle.  ((code, v1, v2) determines support through freq_h, so
     the result is one row per capture.)"""
     return (
-        _with_capture_hash(cand.select(*CAPTURE_KEY))
+        cand.select(*CAPTURE_KEY, *capture_hash())
         .join(F.broadcast(freq_h), on=["h1", "h2"])
         .select(*CAPTURE_KEY, "support")
         .distinct()

@@ -62,6 +62,7 @@ from rdfind_spark.util import materialize
 from rdfind_spark.operators.cind import (
     JV,
     build_capture_tables,
+    capture_hash,
     capture_overlaps,
     cold_line_join,
     hot_line_census,
@@ -120,10 +121,8 @@ def _support_pruned(cands: DataFrame, supports: DataFrame) -> DataFrame:
     return (
         cands.select(
             "*",
-            F.xxhash64("dep_code", "dep_v1", "dep_v2").alias("dep_h1"),
-            F.hash("dep_code", "dep_v1", "dep_v2").alias("dep_h2"),
-            F.xxhash64("ref_code", "ref_v1", "ref_v2").alias("ref_h1"),
-            F.hash("ref_code", "ref_v1", "ref_v2").alias("ref_h2"),
+            *capture_hash("dep_"),
+            *capture_hash("ref_"),
         )
         .join(
             F.broadcast(
@@ -452,13 +451,9 @@ def discover_cinds_staged(
         hot_overflow = materialize(hot_overflow, "hot_overflow")
     freq_u = frequent.filter(F.col("code").isin(list(cc.VALID_UNARY_CODES)))
 
-    def _keys_of(freq_subset: DataFrame) -> DataFrame:
-        return freq_subset.select(
-            F.xxhash64("code", "v1", "v2").alias("h1"),
-            F.hash("code", "v1", "v2").alias("h2"),
-        )
-
-    capu = capf.join(F.broadcast(_keys_of(freq_u)), on=["h1", "h2"], how="left_semi")
+    capu = capf.join(
+        F.broadcast(freq_u.select(*capture_hash())), on=["h1", "h2"], how="left_semi"
+    )
 
     # ---- stage 1: unary/unary overlaps (skew-hardened shared
     # machinery) — capu is already the hashed capf form it expects; the

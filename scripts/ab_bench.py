@@ -4,90 +4,93 @@
 Usage: python scripts/ab_bench.py REPO_PATH_OR_GIT_REF [query ...]
 
 The first argument is either a directory holding an ``__spark_entry__``
-or a git ref (tag/commit) of this repo — a ref is materialized once as
-a detached ``git worktree`` under /tmp and reused across invocations,
-so historical snapshots never need to be committed into the tree.
+or a git ref (commit SHA, branch) of this repo — a ref is extracted
+once with ``git archive`` into ``$TMPDIR/ab_snapshot_<sha>`` and reused
+across invocations, so historical snapshots never need to be committed
+into the tree.
 
-Runs the named queries from that snapshot's ``__spark_entry__`` under
-the same session config + inter-query cache hygiene as bench.py (fresh
-process per invocation, sf0.001 warmup of the same queries first so
-both sides pay JIT equally), and prints one JSON line
+Runs the named queries from that snapshot's ``__spark_entry__`` in the
+session that bench.py starts (``rdfind_spark.session.spark_session`` of
+THIS tree, loaded by file path, so every side is measured in the same
+profile) with bench.py's cache drop between queries.  Each invocation
+is a fresh process that first runs the same queries at sf0.001,
+untimed, so both sides pay JIT equally, then prints one JSON line
 ``{"repo": ..., "queries": {name: sec}}``.
 
 Drive it alternating sides with >= 3 repeats per side (this VM's
 run-to-run variance is ±40%), e.g.:
 
     for i in 1 2 3; do
-      python scripts/ab_bench.py r2-end q1 q2 >> ab.jsonl
-      python scripts/ab_bench.py /root/repo q1 q2 >> ab.jsonl
+      python scripts/ab_bench.py <parent-sha> q1 q2 >> ab.jsonl
+      python scripts/ab_bench.py . q1 q2 >> ab.jsonl
     done
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _materialize_snapshot(spec: str) -> str:
-    """Directory path → itself; git ref → a cached detached worktree."""
+    """Directory path → itself; git ref → a cached extracted snapshot."""
     if os.path.isdir(spec):
         return os.path.abspath(spec)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sha = subprocess.check_output(
-        ["git", "-C", repo_root, "rev-parse", "--verify", spec + "^{commit}"],
+        ["git", "-C", REPO, "rev-parse", "--verify", spec + "^{commit}"],
         text=True,
     ).strip()
-    target = f"/tmp/ab_worktree_{sha[:12]}"
+    target = os.path.join(tempfile.gettempdir(), f"ab_snapshot_{sha[:12]}")
     if not os.path.isdir(target):
-        subprocess.check_call(
-            ["git", "-C", repo_root, "worktree", "add", "--detach", target, sha]
+        partial = tempfile.mkdtemp(prefix=f"ab_snapshot_{sha[:12]}.")
+        archive = subprocess.Popen(
+            ["git", "-C", REPO, "archive", sha], stdout=subprocess.PIPE
         )
+        subprocess.check_call(["tar", "-x", "-C", partial], stdin=archive.stdout)
+        archive.stdout.close()
+        if archive.wait() != 0:
+            raise RuntimeError(f"git archive {sha} failed")
+        os.rename(partial, target)
     return target
+
+
+def _load_session_module():
+    """This tree's ``rdfind_spark/session.py``, imported by path under a
+    name outside the package: importing ``rdfind_spark.session`` would
+    put this tree's ``rdfind_spark`` into ``sys.modules`` and the
+    snapshot would then run this tree's engine."""
+    spec = importlib.util.spec_from_file_location(
+        "_ab_bench_session", os.path.join(REPO, "rdfind_spark", "session.py")
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 def main() -> int:
     repo = _materialize_snapshot(sys.argv[1])
     names = sys.argv[2:]
+    session = _load_session_module()
     sys.path.insert(0, repo)
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    import rdfind_spark
+
+    for module in (entry, rdfind_spark):
+        if not os.path.abspath(module.__file__).startswith(repo + os.sep):
+            raise RuntimeError(f"{module.__name__} imported from {module.__file__}, not {repo}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("rdfind-spark-ab")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = session.spark_session("rdfind-spark-ab")
 
     queries = entry.queries()
-
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
 
     for name in names:  # untimed JIT warmup, same plan shapes
         try:
@@ -96,7 +99,7 @@ def main() -> int:
             ).mode("overwrite").save()
         except Exception as exc:  # pragma: no cover
             print(f"# warmup {name}: {exc}", file=sys.stderr)
-        _clear()
+        session.drop_cached(spark)
 
     timings = {}
     for name in names:
@@ -105,7 +108,7 @@ def main() -> int:
             "overwrite"
         ).save()
         timings[name] = round(time.time() - t0, 3)
-        _clear()
+        session.drop_cached(spark)
     print(json.dumps({"repo": repo, "queries": timings}), flush=True)
     spark.stop()
     return 0

@@ -45,9 +45,9 @@ def normalize(rows, columns, strict: bool = False):
 
 def main() -> int:
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from rdfind_spark.session import spark_session
     from rdfind_spark.sources.triples import TABLES
 
     argv = [a for a in sys.argv[1:] if a != "--strict"]
@@ -55,18 +55,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("check-oracle")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = spark_session("check-oracle", shuffle_partitions=32, driver_memory="16g")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

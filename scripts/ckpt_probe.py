@@ -18,20 +18,11 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _RUNNER = r"""
-import os, sys, time
+import sys, time
 sys.path.insert(0, @REPO@)
-from pyspark.sql import SparkSession
 import __spark_entry__ as entry
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "128")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-         .config("spark.driver.memory", "48g")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
+from rdfind_spark.session import spark_session
+spark = spark_session("rdfind-spark-ckpt-probe")
 q = entry.queries()[@NAME@]
 # untimed sf0.001 warmup so codegen/JIT never lands in the timing
 q(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()

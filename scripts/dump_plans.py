@@ -18,9 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from rdfind_spark.session import drop_cached, spark_session
 
     tag = sys.argv[1]
     args = sys.argv[2:]
@@ -31,23 +30,7 @@ def main() -> int:
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("rdfind-spark-dump-plans")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = spark_session("rdfind-spark-dump-plans")
 
     from rdfind_spark import util
 
@@ -81,10 +64,7 @@ def main() -> int:
                 fh.write(captured)
             print(f"wrote {cpath} ({len(captured)} chars)")
         util.PLAN_CAPTURE = None
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
+        drop_cached(spark)
     spark.stop()
     return 0
 

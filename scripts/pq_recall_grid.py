@@ -28,10 +28,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from rdfind_spark.functions import similarity as sim
+from rdfind_spark.session import spark_session
 
 SKEW_N = 500
 SKEW_DIM = 64
@@ -355,15 +355,7 @@ def main() -> int:
     skewed = "--skewed" in sys.argv[1:]
     grid = "--grid" in sys.argv[1:]
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("pq-recall-grid", driver_memory="16g")
     if grid:
         embs = build_grid_fixture(spark, "/tmp/grid_embeddings.parquet")
         print(

@@ -27,10 +27,10 @@ from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from rdfind_spark.operators.cind import discover_cinds
+from rdfind_spark.session import drop_cached, spark_session
 from rdfind_spark.sources.triples import triple_view
 
 
@@ -38,28 +38,19 @@ def _session():
     """One session config for every probe mode — tuning a knob for one
     mode and not the other would make their timings non-comparable.
     ``SPARK_GRAFT_PROBE_PARTITIONS`` overrides the shuffle parallelism
-    (default 128) — used to measure how much of the top-end probe
+    (default 4 × cores) — used to measure how much of the top-end probe
     super-linearity is the pinned per-partition volume rather than the
     plan.  ``SPARK_GRAFT_PROBE_MEM`` overrides the driver/executor heap
     (default 48g) — used with the half-base ladder (``--half-base``) to
     separate the single-JVM memory confound from a genuine plan defect:
     if the cost curve tracks working-set-per-heap rather than copy
     count, the super-linearity is the local harness, not the plan."""
-    parts = os.environ.get("SPARK_GRAFT_PROBE_PARTITIONS", "128")
-    mem = os.environ.get("SPARK_GRAFT_PROBE_MEM", "48g")
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    parts = os.environ.get("SPARK_GRAFT_PROBE_PARTITIONS")
+    return spark_session(
+        "scale-probe",
+        shuffle_partitions=int(parts) if parts else None,
+        driver_memory=os.environ.get("SPARK_GRAFT_PROBE_MEM", "48g"),
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def main() -> int:
@@ -157,11 +148,7 @@ def main() -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# {n}x: {dt:.1f}s rows={rows}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -211,11 +198,7 @@ def _dedup_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# {n}x: {dt:.1f}s pairs={rows}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -266,11 +249,7 @@ def _cosine_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# {n}x: {dt:.1f}s pairs={rows}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -314,11 +293,7 @@ def _kcore_probe(ns) -> int:
         results[n] = (dt, chk.rows, chk.s)
         print(f"# kcore {n}x: {dt:.1f}s rows={chk.rows} degsum={chk.s}",
               flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         _, r1, s1 = results[1]
         for n, (dt, rows, s) in results.items():
@@ -369,11 +344,7 @@ def _prefix_jaccard_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# prefix-jaccard {n}x: {dt:.1f}s pairs={rows}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -408,14 +379,6 @@ def _copied_docs(spark, base, n: int):
     return reduce(lambda a, b: a.unionByName(b), copies)
 
 
-def _probe_cleanup(spark) -> None:
-    spark.catalog.clearCache()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        it.next()._2().unpersist(False)
-    spark.sparkContext._jvm.System.gc()
-
-
 def _funnel_probe(ns) -> int:
     """Disjoint-copy ladder for the sequential dedup funnel.  Exactness
     of the check differs by stage: stage 1 (exact md5) is prefix-stable
@@ -447,7 +410,7 @@ def _funnel_probe(ns) -> int:
             f"s2={rows[2].docs_in}/{rows[2].docs_kept}",
             flush=True,
         )
-        _probe_cleanup(spark)
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -487,7 +450,7 @@ def _minhash_est_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# minhash-est {n}x: {dt:.1f}s pairs={rows}", flush=True)
-        _probe_cleanup(spark)
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -519,7 +482,7 @@ def _containment_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# containment {n}x: {dt:.1f}s pairs={rows}", flush=True)
-        _probe_cleanup(spark)
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -608,11 +571,7 @@ def _docs_probe(ns, which: str) -> int:
         rows = chk.rows
         results[n] = (dt, rows, sums)
         print(f"# {which} {n}x: {dt:.1f}s rows={rows} sums={sums}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         _, r1, s1 = results[1]
         for n, (dt, rows, sums) in results.items():
@@ -676,11 +635,7 @@ def _triangle_probe(ns) -> int:
             dt = time.time() - t0
             results[n] = (dt, rows)
             print(f"# {n}x: {dt:.1f}s nodes_in_triangles={rows}", flush=True)
-            spark.catalog.clearCache()
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-            spark.sparkContext._jvm.System.gc()
+            drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():
@@ -727,11 +682,7 @@ def _ann_probe(ns) -> int:
         dt = time.time() - t0
         results[n] = (dt, rows)
         print(f"# {n}x: {dt:.1f}s rows={rows}", flush=True)
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        spark.sparkContext._jvm.System.gc()
+        drop_cached(spark)
     if 1 in results:
         r1 = results[1][1]
         for n, (dt, rows) in results.items():

@@ -24,46 +24,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     names = sys.argv[1:]
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from rdfind_spark.session import drop_cached, spark_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("rdfind-spark-stageprof")
-        .config("spark.sql.shuffle.partitions", str(int(cpus) * 4))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "3000")
-        .config("spark.ui.retainedJobs", "3000")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = spark_session("rdfind-spark-stageprof", ui=True)
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
     queries = entry.queries()
-
-    def _clear() -> None:
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
 
     def _stages() -> list[dict]:
         url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
@@ -121,7 +90,7 @@ def main() -> int:
             ).mode("overwrite").save()
         except Exception as exc:
             print(f"# warmup {name}: {exc}", file=sys.stderr)
-        _clear()
+        drop_cached(spark)
 
     for name in names:
         before_ids = {s["stageId"] for s in _stages()}
@@ -133,7 +102,7 @@ def main() -> int:
             "overwrite"
         ).save()
         wall = time.time() - t0
-        _clear()
+        drop_cached(spark)
         stages = [s for s in _stages() if s["stageId"] not in before_ids]
         stages.sort(key=lambda s: -s.get("executorRunTime", 0))
         jobmap = _job_of_stage()

@@ -56,22 +56,13 @@ def main() -> int:
     out_text = os.path.join(work, "cinds_text")
     out_parquet = os.path.join(work, "cinds_parquet")
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
     # Phase 1: melt -> .nt.gz part files (one short Spark session; the
     # CLI runs get their own sessions, like a real user invocation).
     t0 = time.time()
-    from pyspark.sql import SparkSession
+    from rdfind_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("text-e2e-export")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("text-e2e-export", driver_memory=None)
+    master = spark.sparkContext.master
     from rdfind_spark.sources.sinks import write_ntriples
     from rdfind_spark.sources.triples import triple_view
 
@@ -104,7 +95,7 @@ def main() -> int:
             [
                 sys.executable, "-m", "rdfind_spark", "rdfind", inp,
                 "--support", str(args.support),
-                "--master", f"local[{cpus}]",
+                "--master", master,
                 "--driver-memory", "48g",
                 "--output", out,
             ],

@@ -49,18 +49,9 @@ CIND_COLS = [
 
 
 def _session():
-    from pyspark.sql import SparkSession
+    from rdfind_spark.session import spark_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    return spark_session("zipf-cind-probe", driver_memory="16g")
 
 
 def hot_census(triples, min_support: int = 10) -> dict:

@@ -3,24 +3,13 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from rdfind_spark.session import spark_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("rdfind-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.maxPlanStringLength", "1000000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = spark_session("rdfind-spark-tests", shuffle_partitions=8, driver_memory="8g")
     yield spark
     spark.stop()
 
