@@ -148,19 +148,17 @@ def _cmd_rdfind(args: argparse.Namespace) -> int:
 
         _emit(condition_counts(triples, args.support), args)
         return 0
-    if args.do_only_join or args.create_join_histogram:
+    if args.create_join_histogram:
         from rdfind_spark.operators.captures import capture_candidates
         from rdfind_spark.operators.census import join_line_histogram
-        from rdfind_spark.operators.cind import (
-            capture_supports,
-            distinct_captures,
-        )
 
-        dcap = distinct_captures(capture_candidates(triples, args.projection))
-        if args.create_join_histogram:
-            _emit(join_line_histogram(dcap), args)
-        else:
-            _emit(capture_supports(dcap), args)
+        dcap = capture_candidates(triples, args.projection).distinct()
+        _emit(join_line_histogram(dcap), args)
+        return 0
+    if args.do_only_join:
+        from rdfind_spark.operators.cind import frequent_capture_supports
+
+        _emit(frequent_capture_supports(triples, 1, args.projection), args)
         return 0
 
     cinds = traversal(

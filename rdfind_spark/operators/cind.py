@@ -39,27 +39,24 @@ from pyspark.sql import functions as F
 
 from rdfind_spark import condition_codes as cc
 from rdfind_spark.operators.captures import capture_candidates
-from rdfind_spark.util import materialize, release, salted_join
+from rdfind_spark.util import materialize, release
 
 CAPTURE_KEY = ["code", "v1", "v2"]
 
-# A join line with more than HOT_LINE_K frequent captures is hot.  The
-# pair enumerator cuts such a line into HOT_LINE_K-wide position blocks
-# (see _grouped_pair_counts), so no task emits more than HOT_LINE_K²
-# ≈ 260k pairs from one cell — roughly the point where one task's share
-# of the product outweighs the cost of replicating the line's blocks.
-# N_SALT is the salt factor of the verify join over mask-cap overflow
-# lines (cold_line_join).
+# A join line with more than HOT_LINE_K frequent captures is hot.  Both
+# engines cut a wide line into HOT_LINE_K-wide position blocks
+# (_block_cells), so no task emits more than HOT_LINE_K² ≈ 260k pairs
+# from one cell — roughly the point where one task's share of the
+# product outweighs the cost of replicating the line's blocks.
 HOT_LINE_K = 512
-N_SALT = 32
 
 # Cap on the number of hot lines handled by the bitmask decomposition:
 # each masked line costs one bit per capture (n/64 mask columns) and one
 # driver-collected tuple, so a pathological hub distribution (tens of
 # thousands of hot lines) would mean hundreds of mask columns and an
 # unbounded collect.  Beyond the cap, only the MAX_HOT_MASK *hottest*
-# lines get masks; the overflow lines stay exact through the block
-# split of the pair enumerator and the salted verify join (graceful
+# lines get masks; the overflow lines stay exact through the position
+# block split of the pair enumerator and of the verify join (graceful
 # degradation, no driver blow-up).
 MAX_HOT_MASK = 4096
 
@@ -72,19 +69,6 @@ def _pair_parallelism(df: DataFrame) -> int:
     session's shuffle parallelism, since join output is 10-100× its
     input."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")) * 4
-
-
-def distinct_captures(candidates: DataFrame) -> DataFrame:
-    return candidates.distinct()
-
-
-def capture_supports(dcap: DataFrame) -> DataFrame:
-    """support = number of distinct join values of the capture."""
-    return dcap.groupBy(*CAPTURE_KEY).agg(F.count("*").alias("support"))
-
-
-def frequent_captures(supports: DataFrame, min_support: int) -> DataFrame:
-    return supports.filter(F.col("support") >= min_support)
 
 
 def capture_hash(prefix: str = "") -> list[Column]:
@@ -132,26 +116,6 @@ def assert_hash_injective(cand: DataFrame) -> None:
             f"96-bit capture-key hash collision: {row.nc} distinct captures "
             f"but {row.nch} distinct (h1, h2) pairs"
         )
-
-
-def pruned_captures(dcap: DataFrame, frequent: DataFrame) -> DataFrame:
-    """Keep only capture instances whose capture is frequent, compacted
-    to ``(jv1, jv2, h1, h2, support)`` — the join value, like the
-    capture key, carried as a 96-bit hash pair so every downstream
-    shuffle moves fixed-width integers instead of URI strings.  The
-    frequent side is result-sized (bounded by #distinct-values /
-    min_support), so this is a broadcast-able big-to-small join: the
-    bulk ``dcap`` side is never shuffled here (the reference ships the
-    same information as a broadcast Bloom filter,
-    ``programs/RDFind.scala:374-399``)."""
-    fh = frequent.select(*CAPTURE_KEY, "support", *capture_hash())
-    return dcap.join(F.broadcast(fh), on=CAPTURE_KEY).select(
-        F.xxhash64("join_value").alias("jv1"),
-        F.hash("join_value").alias("jv2"),
-        "h1",
-        "h2",
-        "support",
-    )
 
 
 # Bloom-sketch parameters for the approximate-then-verify path
@@ -228,8 +192,8 @@ def _apply_sketch_filter(pairs: DataFrame, sketches: DataFrame) -> DataFrame:
 # MAX_HOT_MASK hottest hot lines are named on the driver and encoded as
 # per-capture 64-bit membership masks, so a pair's hot-line overlap is
 # a popcount instead of a k² join; hot lines past the cap (the
-# overflow) are never collected and stay exact as cold lines: the pair
-# enumerator block-splits them, the verify join salts them.
+# overflow) are never collected and stay exact as cold lines, cut into
+# position blocks by the pair enumerator and the verify join alike.
 
 
 def hot_line_census(capf: DataFrame) -> tuple[list, DataFrame | None]:
@@ -341,29 +305,39 @@ def cold_line_join(
     hot_values: list,
     overflow: DataFrame | None,
 ) -> DataFrame:
-    """Bipartite equi-join of two capture-instance sides on the join
-    value, over cold lines only: the masked ``hot_values`` lines are
-    left out (their share is ``hot_line_overlap``), and the ``overflow``
-    lines go through ``util.salted_join`` — ``a`` rows salted, ``b``
-    rows replicated N_SALT ways — so their k_a × k_b product spreads
-    over N_SALT join keys instead of one task.  Per-line counts add, so
-    the union of the two streams is exact."""
+    """Bipartite pairs of two ``(jv1, jv2, h1, h2)`` capture-instance
+    sides over cold lines only: one ``(a_h1, a_h2, b_h1, b_h2)`` row per
+    a-capture × b-capture sharing a line, per line.  The masked
+    ``hot_values`` lines are left out (their share is
+    ``hot_line_overlap``); the ``overflow`` lines are grouped into one
+    sorted capture array per side and emitted through the position
+    blocks of ``_block_cells``, so no task emits more than HOT_LINE_K²
+    pairs of one line.  Every other line is one plain equi-join.
+    Per-line rows add, so the union of the two streams is exact."""
     hot = F.broadcast(_hot_keys(a, hot_values))
-    a = a.join(hot, on=JV, how="left_anti")
-    b = b.join(hot, on=JV, how="left_anti")
+    a = a.select(*JV, "h1", "h2").join(hot, on=JV, how="left_anti")
+    b = b.select(*JV, "h1", "h2").join(hot, on=JV, how="left_anti")
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(*JV, F.col("h1").alias(f"{s}_h1"), F.col("h2").alias(f"{s}_h2"))
+
+    def plain(x: DataFrame, y: DataFrame) -> DataFrame:
+        return side(x, "a").join(side(y, "b"), on=JV).select(*PKEY)
+
     if overflow is None:
-        return a.join(b, on=JV)
+        return plain(a, b)
     ovf = F.broadcast(overflow.select(*JV))
-    narrow = a.join(ovf, on=JV, how="left_anti").join(
-        b.join(ovf, on=JV, how="left_anti"), on=JV
+    narrow = plain(
+        a.join(ovf, on=JV, how="left_anti"), b.join(ovf, on=JV, how="left_anti")
     )
-    wide = salted_join(
-        a.join(ovf, on=JV, how="left_semi"),
-        b.join(ovf, on=JV, how="left_semi"),
-        on=JV,
-        salt=N_SALT,
-    )
-    return narrow.unionByName(wide)
+    n_pair = _pair_parallelism(a)
+
+    def arrays(df: DataFrame, name: str) -> DataFrame:
+        wide = df.join(ovf, on=JV, how="left_semi")
+        return _line_arrays(wide, n_pair).withColumnRenamed("caps", name)
+
+    lines = arrays(a, "left").join(arrays(b, "right"), on=JV)
+    return narrow.unionByName(_cell_pairs(_block_cells(lines, n_pair, "left", "right")))
 
 
 def capture_overlaps(
@@ -381,7 +355,7 @@ def capture_overlaps(
     generalized to all arities).
 
     The quadratic pair emission + aggregate run entirely on the compact
-    hashed keys from ``pruned_captures`` — fixed-width UnsafeRows keep
+    hashed keys of ``build_capture_tables`` — fixed-width UnsafeRows keep
     the aggregation hash map small and make spill sort cheap (string
     keys here previously caused sort-based-agg fallback and a >10×
     slowdown).  Strings are restored afterwards from the result-sized
@@ -559,6 +533,37 @@ def _line_arrays(rows: DataFrame, n_pair: int) -> DataFrame:
     )
 
 
+def _block_cells(lines: DataFrame, n_pair: int, left: str, right: str) -> DataFrame:
+    """The ``(left, right, diag)`` cells of the sorted capture arrays in
+    columns ``left`` and ``right`` of ``lines`` (one row per join line):
+    the reference's join-line rebalancing (``AssignJoinLineRebalancing.
+    scala:15-65``) in array form.  Each array is cut into
+    HOT_LINE_K-wide position blocks, and each cell (block p of ``left``,
+    block q of ``right``) is repartitioned on (line, p, q), so no task
+    emits more than HOT_LINE_K² pairs of one cell.  When ``left`` and
+    ``right`` name the same array the cells are its self pairs p <= q,
+    diagonal when p = q; otherwise every left-block × right-block
+    cell, none diagonal."""
+    same = left == right
+    arrays = [left] if same else [left, right]
+
+    def last(c: str) -> Column:
+        return F.expr(f"(size({c}) - 1) div {HOT_LINE_K}")
+
+    def block(c: str, i: str) -> Column:
+        return F.slice(c, F.col(i) * HOT_LINE_K + 1, F.lit(HOT_LINE_K))
+
+    first_q = F.col("p") if same else F.lit(0)
+    diag = F.col("p") == F.col("q") if same else F.lit(False)
+    return (
+        lines.select(*JV, *arrays, F.explode(F.sequence(F.lit(0), last(left))).alias("p"))
+        .select(*JV, *arrays, "p", F.explode(F.sequence(first_q, last(right))).alias("q"))
+        .select(*JV, "p", "q", block(left, "p").alias("left"), block(right, "q").alias("right"))
+        .repartition(n_pair, *JV, "p", "q")
+        .select("left", "right", diag.alias("diag"))
+    )
+
+
 def _grouped_pair_counts(
     capf: DataFrame,
     min_overlap: int,
@@ -578,15 +583,11 @@ def _grouped_pair_counts(
     merge, restore) sees identical keys.
 
     ``wide``: the (jv1, jv2) keys of the lines the caller's hot census
-    found wider than HOT_LINE_K (None: no line is).  They get the
-    reference's join-line rebalancing (``AssignJoinLineRebalancing.
-    scala:15-65``) in array form: a line is cut into b = ceil(k /
-    HOT_LINE_K) position blocks, and each block pair (p <= q) becomes a
-    cell repartitioned on (line, p, q) — a diagonal cell emits the
-    pairs inside its block, an off-diagonal cell every block-p ×
-    block-q pair.  Blocks of a sorted array are sorted and disjoint, so
-    every pair is emitted once, in the same orientation, and no task
-    emits more than HOT_LINE_K² pairs of one cell.  Every other line
+    found wider than HOT_LINE_K (None: no line is).  They are cut into
+    position blocks (``_block_cells``): a diagonal cell emits the pairs
+    inside its block, an off-diagonal cell every block-p × block-q
+    pair.  Blocks of a sorted array are sorted and disjoint, so every
+    pair is emitted once, in the same orientation.  Every other line
     emits in its grouping task, behind its one exchange.  The counts
     are exact whatever ``wide`` holds: a narrow line in it is one
     diagonal cell, and a wide line left out emits from one task."""
@@ -607,19 +608,7 @@ def _grouped_pair_counts(
     )
     pairs = _cell_pairs(narrow)
     if wide is not None:
-        last = F.expr(f"(size(caps) - 1) div {HOT_LINE_K}")
-
-        def block(c: str) -> Column:
-            return F.slice("caps", F.col(c) * HOT_LINE_K + 1, F.lit(HOT_LINE_K))
-
-        cells = (
-            blocked.select(*JV, "caps", F.explode(F.sequence(F.lit(0), last)).alias("p"))
-            .select(*JV, "caps", "p", F.explode(F.sequence(F.col("p"), last)).alias("q"))
-            .select(*JV, "p", "q", block("p").alias("left"), block("q").alias("right"))
-            .repartition(n_pair, *JV, "p", "q")
-            .select("left", "right", (F.col("p") == F.col("q")).alias("diag"))
-        )
-        pairs = pairs.unionByName(_cell_pairs(cells))
+        pairs = pairs.unionByName(_cell_pairs(_block_cells(blocked, n_pair, "caps", "caps")))
     if sketches is not None:
         pairs = _apply_sketch_filter(pairs, sketches)
     # Pair counting WITHOUT map-side partial aggregation: pair keys are

@@ -61,6 +61,7 @@ from rdfind_spark import condition_codes as cc
 from rdfind_spark.util import materialize
 from rdfind_spark.operators.cind import (
     JV,
+    PKEY,
     build_capture_tables,
     capture_hash,
     capture_overlaps,
@@ -185,8 +186,9 @@ def _verify_candidates(
     pair is read off a full-line mask table over ``caps``, built here
     only when the gate below rejects the plain join
     (``hot_line_overlap``) — linear in candidates, the hub product never
-    materializes.  The remaining lines, including the census overflow
-    past the mask cap, are counted by ``cold_line_join``.  Always
+    materializes.  The remaining lines are counted by ``cold_line_join``,
+    which cuts the census overflow past the mask cap into the same
+    position blocks as the discovery pair enumerator.  Always
     exact: mask values depend only on (capture, hot line set), and the
     full-line census is a superset of any restricted side's hot set."""
     ch = materialize(
@@ -243,8 +245,13 @@ def _verify_candidates(
         F.col("h2").alias("dep_h2"),
         F.col("support").alias("dep_support"),
     ).join(F.broadcast(ch.select(*_DEP_H).distinct()), on=_DEP_H, how="left_semi")
+
+    def as_side(df: DataFrame, side: str) -> DataFrame:
+        return df.select(*JV, F.col(f"{side}_h1").alias("h1"), F.col(f"{side}_h2").alias("h2"))
+
     cold_cnt = (
-        cold_line_join(a, b, hot_values, hot_overflow)
+        cold_line_join(as_side(a, "dep"), as_side(b, "ref"), hot_values, hot_overflow)
+        .select(*[F.col(c).alias(d) for c, d in zip(PKEY, _PAIR_H)])
         .join(F.broadcast(pair_keys), on=_PAIR_H)
         .groupBy(*_PAIR_H)
         .agg(F.count("*").alias("cold_overlap"))

@@ -27,11 +27,7 @@ from rdfind_spark.functions import (
 )
 from rdfind_spark.operators import census, rules, transforms
 from rdfind_spark.operators.captures import capture_candidates
-from rdfind_spark.operators.cind import (
-    capture_overlaps,
-    discover_cinds,
-    distinct_captures,
-)
+from rdfind_spark.operators.cind import capture_overlaps, discover_cinds
 from rdfind_spark.sources.triples import triple_view
 
 MIN_SUPPORT = 10
@@ -53,7 +49,7 @@ def register(
 
 
 def _dcap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return distinct_captures(capture_candidates(triple_view(spark, sf_dir)))
+    return capture_candidates(triple_view(spark, sf_dir)).distinct()
 
 
 # ----------------------------------------------------------- CIND core

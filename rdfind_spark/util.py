@@ -1,9 +1,11 @@
-"""Small pure-Python utilities: longest-prefix string trie (URL
-shortening) and null-sensitive ordering.
+"""Shared helpers: the longest-prefix string trie (URL shortening),
+null-sensitive ordering, and the engine's Spark primitives — stage
+materialization and its release, plan capture, input spreading and
+loop-sized shuffle pins.
 
-Semantics pinned by the reference's unit tests (reimplemented, not
-copied): ``rdfind-util`` StringTrie$Test.scala:12-103 and
-NullSensitiveOrdered$Test.scala:12-23.
+The trie and the ordering follow the reference's unit tests
+(reimplemented, not copied): ``rdfind-util`` StringTrie$Test.scala:12-103
+and NullSensitiveOrdered$Test.scala:12-23.
 """
 
 from __future__ import annotations
@@ -102,24 +104,19 @@ def materialize(df, label: str = ""):
     always recoverable-by-rerun.
 
     Cluster posture: set ``spark.rdfind.checkpointDir`` (session conf,
-    e.g. an HDFS/S3 path) — or the ``RDFIND_CHECKPOINT_DIR`` environment
-    variable — and every materialization switches to reliable
+    e.g. an HDFS/S3 path) and every materialization switches to reliable
     ``checkpoint()``: blocks are written to the shared store and survive
     executor loss, at the cost of one write+read round-trip per
     materialized stage.  Local single-JVM runs (tests, bench) keep the
     fast default.
     """
-    import os
-
     spark = df.sparkSession
     sc = spark.sparkContext
     if label:
         previous = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(label)
     try:
-        cdir = spark.conf.get(
-            "spark.rdfind.checkpointDir", os.environ.get("RDFIND_CHECKPOINT_DIR")
-        )
+        cdir = spark.conf.get("spark.rdfind.checkpointDir", None)
         if not cdir:
             return df.localCheckpoint(eager=True)
         # setCheckpointDir once per session (idempotent target dir)
@@ -254,79 +251,3 @@ def release(df) -> None:
                 leaf.rdd().unpersist(False)
     except Exception:
         pass
-
-
-def salted_join(
-    left,
-    right,
-    on: list[str],
-    how: str = "inner",
-    salt: int = 16,
-):
-    """Skew-hardened equi-join: each (large, skewed) ``left``-side row
-    gets an arbitrary salt in [0, salt), the (smaller) ``right`` side is
-    replicated ``salt`` ways, and the join runs on (keys + salt) so one
-    hot key spreads over ``salt`` reducer partitions instead of melting
-    a single task.  The salt value is partition-layout-dependent (it
-    hashes ``monotonically_increasing_id``) and may differ when a
-    partition is recomputed — harmless for correctness, since every
-    salt value has a matching right-side replica; do not rely on it for
-    reproducible row placement.
-
-    The CIND hot-line kernel joins its mask-cap overflow lines through
-    it (operators/cind.py ``cold_line_join``, the staged engine's
-    evidence verify); the discovery pair count does not salt, it cuts
-    wide join lines into position blocks (``_grouped_pair_counts``),
-    which emits each unordered pair once.  AQE's skew-join split
-    handles moderate skew on its own; explicit salting is for the
-    regime where a single key exceeds what one task can hold at all.  ``right`` is replicated
-    ``salt``× — keep it the smaller side.
-
-    Only inner/left joins are supported (for other types the replicated
-    right side would change multiplicities).
-    """
-    from pyspark.sql import functions as F
-
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports how='inner'|'left' only")
-    lsalt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt))
-    l = left.withColumn("__salt", lsalt)
-    r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    return l.join(r, on=[*on, "__salt"], how=how).drop("__salt")
-
-
-def skew_report(df, cols: list[str], top_k: int = 20):
-    """Skew diagnostic for a prospective join/groupBy key: the top-k
-    heaviest key values with their row counts, frequency in ppm of the
-    total, and a suggested salt factor (heavy-key rows ÷ a 4M-row task
-    budget, the same sizing rule as the CIND engine's hub handling).
-
-    One aggregation + a TakeOrdered top-k — safe to run on the full
-    table at any scale; the output is top_k rows.  Use before choosing
-    between a plain join, AQE skew splitting, and ``salted_join``:
-    suggested_salt == 1 for every reported key means AQE alone is
-    enough."""
-    from pyspark.sql import functions as F
-
-    rows_per_task = 4_000_000
-    counts = df.groupBy(*cols).agg(F.count("*").alias("n_rows"))
-    total = df.count()
-    return (
-        counts.orderBy(F.col("n_rows").desc(), *cols)
-        .limit(top_k)
-        .select(
-            *cols,
-            "n_rows",
-            (F.col("n_rows") * 1_000_000 / F.lit(max(total, 1)))
-            .cast("long")
-            .alias("freq_ppm"),
-            F.greatest(
-                F.lit(1),
-                F.ceil(F.col("n_rows") / F.lit(rows_per_task)),
-            )
-            .cast("int")
-            .alias("suggested_salt"),
-        )
-    )

@@ -55,7 +55,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    spark = spark_session("check-oracle", shuffle_partitions=32, driver_memory="16g")
+    spark = spark_session("check-oracle", shuffle_partitions=32)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -2,7 +2,7 @@
 """Reliable-checkpoint overhead probe: run the heavy CIND queries at
 sf0.1 alternating between the default ``localCheckpoint`` mode and the
 cluster-posture reliable ``checkpoint(dir)`` mode
-(``RDFIND_CHECKPOINT_DIR``), fresh process per run, and report per-mode
+(``spark.rdfind.checkpointDir``), fresh process per run, and report per-mode
 times — the overhead a cluster deployment pays for surviving executor
 loss (recompute-from-replicated-store instead of query failure).
 
@@ -23,6 +23,8 @@ sys.path.insert(0, @REPO@)
 import __spark_entry__ as entry
 from rdfind_spark.session import spark_session
 spark = spark_session("rdfind-spark-ckpt-probe")
+if @CKPT@:
+    spark.conf.set("spark.rdfind.checkpointDir", @CKPT@)
 q = entry.queries()[@NAME@]
 # untimed sf0.001 warmup so codegen/JIT never lands in the timing
 q(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
@@ -44,20 +46,16 @@ def _dir_bytes(path: str) -> int:
 
 
 def run_once(name: str, ckpt_dir: str | None) -> float:
-    env = dict(os.environ)
-    env.pop("RDFIND_CHECKPOINT_DIR", None)
     before = _dir_bytes(ckpt_dir) if ckpt_dir else 0
-    if ckpt_dir:
-        env["RDFIND_CHECKPOINT_DIR"] = ckpt_dir
+    runner = (
+        _RUNNER.replace("@REPO@", repr(REPO))
+        .replace("@NAME@", repr(name))
+        .replace("@CKPT@", repr(ckpt_dir))
+    )
     out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            _RUNNER.replace("@REPO@", repr(REPO)).replace("@NAME@", repr(name)),
-        ],
+        [sys.executable, "-c", runner],
         capture_output=True,
         text=True,
-        env=env,
         cwd=REPO,
         check=True,
     ).stdout

@@ -355,7 +355,7 @@ def main() -> int:
     skewed = "--skewed" in sys.argv[1:]
     grid = "--grid" in sys.argv[1:]
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    spark = spark_session("pq-recall-grid", driver_memory="16g")
+    spark = spark_session("pq-recall-grid")
     if grid:
         embs = build_grid_fixture(spark, "/tmp/grid_embeddings.parquet")
         print(

@@ -40,16 +40,15 @@ def _session():
     ``SPARK_GRAFT_PROBE_PARTITIONS`` overrides the shuffle parallelism
     (default 4 × cores) — used to measure how much of the top-end probe
     super-linearity is the pinned per-partition volume rather than the
-    plan.  ``SPARK_GRAFT_PROBE_MEM`` overrides the driver/executor heap
-    (default 48g) — used with the half-base ladder (``--half-base``) to
-    separate the single-JVM memory confound from a genuine plan defect:
-    if the cost curve tracks working-set-per-heap rather than copy
-    count, the super-linearity is the local harness, not the plan."""
+    plan.  The heap is the factory's default (``default_driver_memory``);
+    the half-base ladder (``--half-base``) separates the single-JVM
+    memory confound from a genuine plan defect: if the cost curve tracks
+    working-set-per-heap rather than copy count, the super-linearity is
+    the local harness, not the plan."""
     parts = os.environ.get("SPARK_GRAFT_PROBE_PARTITIONS")
     return spark_session(
         "scale-probe",
         shuffle_partitions=int(parts) if parts else None,
-        driver_memory=os.environ.get("SPARK_GRAFT_PROBE_MEM", "48g"),
     )
 
 

@@ -59,7 +59,7 @@ def main() -> int:
     # Phase 1: melt -> .nt.gz part files (one short Spark session; the
     # CLI runs get their own sessions, like a real user invocation).
     t0 = time.time()
-    from rdfind_spark.session import spark_session
+    from rdfind_spark.session import default_driver_memory, spark_session
 
     spark = spark_session("text-e2e-export", driver_memory=None)
     master = spark.sparkContext.master
@@ -96,7 +96,7 @@ def main() -> int:
                 sys.executable, "-m", "rdfind_spark", "rdfind", inp,
                 "--support", str(args.support),
                 "--master", master,
-                "--driver-memory", "48g",
+                "--driver-memory", default_driver_memory(),
                 "--output", out,
             ],
             cwd=REPO,

@@ -51,7 +51,7 @@ CIND_COLS = [
 def _session():
     from rdfind_spark.session import spark_session
 
-    return spark_session("zipf-cind-probe", driver_memory="16g")
+    return spark_session("zipf-cind-probe")
 
 
 def hot_census(triples, min_support: int = 10) -> dict:

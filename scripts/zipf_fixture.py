@@ -4,8 +4,9 @@ task 2: "build the Zipfian-value CIND fixture").
 
 Every CIND number so far was measured on triple-ized TPC-H, whose value
 distribution is benign: no join line comes near HOT_LINE_K, so the
-hot-mask decomposition (operators/cind.py:209-313) — the engine's
-answer to the reference's whole rebalancing subsystem
+hot-mask decomposition (``_cold_pair_counts_with_hot_masks`` in
+operators/cind.py) — the engine's answer to the reference's whole
+rebalancing subsystem
 (rdfind-algorithm .../programs/RDFind.scala:404-444, built for DBpedia
 hub values where |join line|^2 explodes) — has never been tripped at
 its REAL thresholds.  This generator produces the DBpedia shape

@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from rdfind_spark import condition_codes as cc
-from rdfind_spark.operators.cind import discover_cinds
+from rdfind_spark.operators.cind import build_capture_tables, discover_cinds
 from rdfind_spark.oracle import cind_sql
 from rdfind_spark.sources.triples import TABLES, triple_view
 
@@ -75,6 +75,14 @@ def brute_cinds(triples, min_support, minimal=True):
 
         out = {c for c in out if not killed(c)}
     return out
+
+
+def capture_tables(spark, triples, min_support):
+    """``(frequent, capf)`` of the engine's own capture prefix over
+    ``triples``."""
+    df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
+    _, _, _, frequent, capf = build_capture_tables(df, min_support)
+    return frequent, capf
 
 
 def spark_cinds(spark, triples, min_support, minimal=True):
@@ -149,13 +157,13 @@ def test_random_triples_match_brute_force(spark, seed, n):
         assert got == expected, f"minimal={minimal}"
 
 
-def test_salted_pair_join_matches_brute_force(spark, monkeypatch):
-    """Force the hot-line salting path (HOT_LINE_K tiny) and check the
-    result is identical to the unsalted semantics."""
+def test_tiny_hot_line_k_matches_brute_force(spark, monkeypatch):
+    """With HOT_LINE_K tiny nearly every join line is hot, so the
+    hot-line decomposition carries the whole discovery — the result is
+    identical to the brute-force semantics."""
     from rdfind_spark.operators import cind as cind_mod
 
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
-    monkeypatch.setattr(cind_mod, "N_SALT", 4)
     rng = random.Random(7)
     triples = list(
         {
@@ -191,19 +199,9 @@ def test_hot_line_mask_path_matches_brute_force(spark, monkeypatch):
     assert got == expected
     assert expected, "fixture must produce CINDs"
     # sanity: the hub line really was hot (81 > 50) and unique
-    from rdfind_spark.operators.captures import capture_candidates
-    from rdfind_spark.operators.cind import (
-        capture_supports,
-        distinct_captures,
-        frequent_captures,
-        pruned_captures,
-    )
-
-    df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
-    dcap = distinct_captures(capture_candidates(df))
-    freq = frequent_captures(capture_supports(dcap), 10)
-    capf = pruned_captures(dcap, freq)
     import pyspark.sql.functions as F
+
+    _, capf = capture_tables(spark, triples, 10)
 
     hot = (
         capf.groupBy("jv1", "jv2")
@@ -212,7 +210,7 @@ def test_hot_line_mask_path_matches_brute_force(spark, monkeypatch):
         .collect()
     )
     hub_row = (
-        df.select(
+        capf.select(
             F.xxhash64(F.lit("hub")).alias("jv1"), F.hash(F.lit("hub")).alias("jv2")
         )
         .first()
@@ -223,13 +221,13 @@ def test_hot_line_mask_path_matches_brute_force(spark, monkeypatch):
 
 def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
     """More hot lines than MAX_HOT_MASK: only the hottest get bitmask
-    columns, the overflow routes through the salted join — the result
-    must stay exact and the driver collect/mask width bounded by the
-    cap.  (At production thresholds this is the >4k-hub regime.)"""
+    columns, the overflow lines stay cold and are cut into position
+    blocks — the result must stay exact and the driver collect/mask
+    width bounded by the cap.  (At production thresholds this is the
+    >4k-hub regime.)"""
     from rdfind_spark.operators import cind as cind_mod
 
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
-    monkeypatch.setattr(cind_mod, "N_SALT", 4)
     monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
     rng = random.Random(11)
     # small value domains -> many join lines wider than HOT_LINE_K=2,
@@ -245,21 +243,11 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
         }
     )
     # sanity: the overflow regime is actually hit
-    from rdfind_spark.operators.captures import capture_candidates
-    from rdfind_spark.operators.cind import (
-        capture_supports,
-        distinct_captures,
-        frequent_captures,
-        pruned_captures,
-    )
     from pyspark.sql import functions as F
 
-    df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
-    dcap = distinct_captures(capture_candidates(df))
-    freq = frequent_captures(capture_supports(dcap), 3)
+    freq, capf = capture_tables(spark, triples, 3)
     n_hot = (
-        pruned_captures(dcap, freq)
-        .groupBy("jv1", "jv2")
+        capf.groupBy("jv1", "jv2")
         .agg(F.count("*").alias("k"))
         .filter(F.col("k") > 2)
         .count()
@@ -267,7 +255,6 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
     assert n_hot > 4, f"fixture must exceed the mask cap (got {n_hot} hot lines)"
     # the census itself: the cap's worth of lines, hottest first, the
     # same list on a rerun, the rest as overflow — and none below the cap
-    capf = pruned_captures(dcap, freq)
     width = {
         (r.jv1, r.jv2): r.k
         for r in capf.groupBy("jv1", "jv2").agg(F.count("*").alias("k")).collect()
@@ -306,12 +293,19 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
 
 
 def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch):
-    """The pair enumerator on its own, with HOT_LINE_K = 3: lines of
-    widths 1-10 hit the narrow path, exact block edges (3, 6) and
-    partial last blocks (4, 7, 10).  Counts equal a brute-force census
-    of every line's pairs, one row per unordered pair, each row
-    (h1, h2)-lex oriented — with the wide lines named as the census
-    names them, and equally with none or every line named."""
+    """The two pair emitters of the block split on their own, with
+    HOT_LINE_K = 3: lines of widths 1-10 hit the narrow path, exact
+    block edges (3, 6) and partial last blocks (4, 7, 10).
+
+    ``_grouped_pair_counts``: counts equal a brute-force census of
+    every line's pairs, one row per unordered pair, each row (h1,
+    h2)-lex oriented — with the wide lines named as the census names
+    them, and equally with none or every line named.
+
+    ``cold_line_join``: against a second side of other widths on the
+    same lines, the rows are every a × b pair of each line except the
+    masked one, once per line — with the wide lines as overflow, and
+    equally with none or every line as overflow."""
     from collections import Counter
 
     from rdfind_spark.operators import cind as cind_mod
@@ -319,13 +313,20 @@ def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 3)
     rng = random.Random(5)
     pool = sorted({(rng.randrange(-50, 50), rng.randrange(-3, 3)) for _ in range(14)})
-    rows = []
-    expected = Counter()
-    for line, width in enumerate((1, 2, 3, 4, 6, 7, 10, 10, 7)):
-        caps = rng.sample(pool, width)
+    rows, b_rows = [], []
+    expected, bipartite = Counter(), Counter()
+    masked = (3, -3)
+    for line, (width, b_width) in enumerate(
+        zip((1, 2, 3, 4, 6, 7, 10, 10, 7), (3, 6, 1, 5, 6, 2, 9, 3, 10))
+    ):
+        caps, b_caps = rng.sample(pool, width), rng.sample(pool, b_width)
         rows += [(line, -line, h1, h2) for h1, h2 in caps]
+        b_rows += [(line, -line, h1, h2) for h1, h2 in b_caps]
         expected.update(itertools.combinations(sorted(caps), 2))
-    capf = spark.createDataFrame(rows, "jv1 long, jv2 int, h1 long, h2 int")
+        if (line, -line) != masked:
+            bipartite.update(itertools.product(caps, b_caps))
+    schema = "jv1 long, jv2 int, h1 long, h2 int"
+    capf = spark.createDataFrame(rows, schema)
     widths = capf.groupBy("jv1", "jv2").count()
     census = widths.filter("count > 3")
     assert census.count() == 6
@@ -339,6 +340,19 @@ def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch
     assert {((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)): r.overlap for r in floor} == {
         k: n for k, n in expected.items() if n >= 3
     }
+    b = spark.createDataFrame(b_rows, schema)
+    b_census = (
+        widths.unionByName(b.groupBy("jv1", "jv2").count())
+        .filter("count > 3")
+        .select("jv1", "jv2")
+        .distinct()
+    )
+    assert b_census.count() == 7
+    for overflow in (b_census, None, widths):
+        got = cind_mod.cold_line_join(capf, b, [masked], overflow).collect()
+        assert Counter(
+            ((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)) for r in got
+        ) == bipartite
 
 
 def test_hot_index_runs_no_python_worker(spark):
@@ -370,7 +384,6 @@ def test_engine_jobs_stay_on_callers_thread(spark, monkeypatch):
     from rdfind_spark.operators.staged import discover_cinds_staged
 
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
-    monkeypatch.setattr(cind_mod, "N_SALT", 4)
     monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
     rng = random.Random(11)
     triples = list(
@@ -521,20 +534,9 @@ def test_sketch_filter_strategy_matches_brute_force(spark):
 
 def test_value_sketch_containment_semantics(spark):
     """bits(a) ⊆ bits(b) whenever values(a) ⊆ values(b)."""
-    from rdfind_spark.operators.captures import capture_candidates
-    from rdfind_spark.operators.cind import (
-        SKETCH_WORDS,
-        capture_supports,
-        capture_value_sketches,
-        distinct_captures,
-        frequent_captures,
-        pruned_captures,
-    )
+    from rdfind_spark.operators.cind import SKETCH_WORDS, capture_value_sketches
 
-    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
-    dcap = distinct_captures(capture_candidates(df))
-    freq = frequent_captures(capture_supports(dcap), 2)
-    capf = pruned_captures(dcap, freq)
+    freq, capf = capture_tables(spark, TINY, 2)
     sk = {
         (r.h1, r.h2): tuple(r[f"s{w}"] for w in range(SKETCH_WORDS))
         for r in capture_value_sketches(capf).collect()

@@ -12,7 +12,7 @@ from rdfind_spark.cli import main
 from rdfind_spark.operators.captures import capture_candidates
 from rdfind_spark.operators.cind import discover_cinds
 
-from tests.test_cind_engine import TINY
+from tests.test_cind_engine import TINY, brute_capture_sets
 
 NT = """# a comment line
 <http://ex.org/a> <http://ex.org/p> <http://ex.org/b> .
@@ -174,8 +174,10 @@ def test_cli_partial_plan_flags(spark, tmp_path, capsys):
 
     out2 = str(tmp_path / "supports")
     assert main(["rdfind", nt, "--do-only-join", "--parquet", out2]) == 0
-    sup = spark.read.parquet(out2)
-    assert "support" in sup.columns and sup.count() > 0
+    sup = spark.read.parquet(out2).select("code", "v1", "v2", "support")
+    assert sorted(tuple(r) for r in sup.collect()) == sorted(
+        (*capture, len(values)) for capture, values in brute_capture_sets(TINY).items()
+    )
 
     out3 = str(tmp_path / "hist")
     assert main(["rdfind", nt, "--create-join-histogram", "--parquet", out3]) == 0

@@ -10,12 +10,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from rdfind_spark.operators.cind import (
-    capture_supports,
-    distinct_captures,
-    frequent_captures,
-    pruned_captures,
-)
+from rdfind_spark.operators.cind import build_capture_tables
 from rdfind_spark.operators.captures import capture_candidates
 from rdfind_spark.sources.triples import triple_view
 
@@ -37,9 +32,8 @@ def test_parquet_filter_pushdown_and_pruning(spark, sf_dir):
 
 
 def test_frequent_capture_pruning_broadcasts(spark, sf_dir):
-    dcap = distinct_captures(capture_candidates(triple_view(spark, sf_dir)))
-    freq = frequent_captures(capture_supports(dcap), 10)
-    p = plan_of(pruned_captures(dcap, freq))
+    capf = build_capture_tables(triple_view(spark, sf_dir), 10)[4]
+    p = plan_of(capf)
     assert "BroadcastHashJoin" in p, "frequent-set pruning join must broadcast"
 
 
@@ -71,9 +65,8 @@ def test_pair_stage_groups_lines_no_self_join(spark, sf_dir):
     result-sized broadcast restore joins."""
     from rdfind_spark.operators.cind import capture_overlaps
 
-    dcap = distinct_captures(capture_candidates(triple_view(spark, sf_dir)))
-    freq = frequent_captures(capture_supports(dcap), 10)
-    ov = capture_overlaps(pruned_captures(dcap, freq), freq, min_overlap=10)
+    _, _, _, freq, capf = build_capture_tables(triple_view(spark, sf_dir), 10)
+    ov = capture_overlaps(capf, freq, min_overlap=10)
     p = plan_of(ov, mode="simple")
     assert "collect_list(" in p, p[:2000]
     assert "ShuffledHashJoin" not in p
@@ -118,9 +111,7 @@ def test_bucketed_capture_table_joins_without_shuffle(spark, sf_dir, tmp_path):
     cross-stage reuse pattern for the 100 TB posture)."""
     from rdfind_spark.sources.sinks import write_bucketed
 
-    dcap = distinct_captures(
-        capture_candidates(triple_view(spark, sf_dir))
-    ).limit(50000)
+    dcap = capture_candidates(triple_view(spark, sf_dir)).distinct().limit(50000)
     write_bucketed(
         dcap, "capt_bucketed", ["join_value"], 8, path=str(tmp_path / "capb")
     )

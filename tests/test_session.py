@@ -54,3 +54,17 @@ def test_drop_cached_leaves_nothing_persisted(spark):
     drop_cached(spark)
 
     assert persisted() == 0
+
+
+def test_default_heap_fits_the_machine():
+    """The factory's default heap is half of the machine's memory,
+    capped at 48g, so a small host does not OOM-kill its own driver and
+    a large one keeps the 48g heap."""
+    from rdfind_spark.session import default_driver_memory
+
+    gib = 1024**3
+    assert default_driver_memory(15 * gib) == "7680m"
+    assert default_driver_memory(8 * gib) == "4096m"
+    assert default_driver_memory(96 * gib) == "49152m"
+    assert default_driver_memory(1024 * gib) == "49152m"
+    assert 0 < int(default_driver_memory()[:-1]) <= 48 * 1024

@@ -55,15 +55,14 @@ def test_staged_hot_line_overflow_cap_matches_brute_force(
 ):
     """Hot lines in the STAGED engine, with more of them than
     MAX_HOT_MASK (4: the census collect and the mask width stay bounded
-    by the cap, and the overflow lines route through cold_line_join's
-    salted join in _verify_candidates) and with all of them masked
+    by the cap, and _verify_candidates' cold_line_join cuts the overflow
+    lines into position blocks) and with all of them masked
     (4096: the verify mask path without overflow) — the result stays
     exact either way (mirror of the all-at-once overflow test in
     test_cind_engine)."""
     from rdfind_spark.operators import cind as cind_mod
 
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
-    monkeypatch.setattr(cind_mod, "N_SALT", 4)
     monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", max_hot_mask)
     rng = random.Random(11)
     triples = list(

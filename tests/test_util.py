@@ -59,27 +59,6 @@ def test_null_ordering():
     assert null_sensitive_cmp("a", "a") == 0
 
 
-def test_salted_join_matches_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from rdfind_spark.util import salted_join
-
-    # one hot key (0) with 5k rows + a long tail
-    left = spark.range(0, 6000).selectExpr(
-        "CASE WHEN id < 5000 THEN 0 ELSE id END AS k", "id AS v"
-    )
-    right = spark.createDataFrame(
-        [(0, "hot"), (5500, "cold"), (9999, "absent-left")], "k long, tag string"
-    )
-    plain = left.join(right, on="k").groupBy("k", "tag").count()
-    salted = salted_join(left, right, on=["k"]).groupBy("k", "tag").count()
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    # left join multiplicities preserved too
-    pl = left.join(right, on="k", how="left").count()
-    sl = salted_join(left, right, on=["k"], how="left").count()
-    assert pl == sl == 6000
-
-
 def test_materialize_label_is_the_job_description(spark):
     """materialize(df, label) runs the jobs that build df under the job
     description ``label`` and restores the caller's description."""
@@ -129,19 +108,6 @@ def test_materialize_reliable_checkpoint_mode(spark, tmp_path):
         )
     finally:
         spark.conf.unset("spark.rdfind.checkpointDir")
-
-
-def test_skew_report_ranks_heavy_keys_and_sizes_salt(spark):
-    from rdfind_spark.util import skew_report
-
-    rows = [("hot",)] * 70 + [("warm",)] * 20 + [("cold",)] * 10
-    df = spark.createDataFrame(rows, "k string")
-    got = skew_report(df, ["k"], top_k=2).collect()
-    assert [(r.k, r.n_rows, r.freq_ppm) for r in got] == [
-        ("hot", 70, 700000),
-        ("warm", 20, 200000),
-    ]
-    assert all(r.suggested_salt == 1 for r in got)  # tiny table: AQE is enough
 
 
 def test_release_frees_local_checkpoint_blocks(spark):
