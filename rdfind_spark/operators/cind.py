@@ -118,73 +118,6 @@ def assert_hash_injective(cand: DataFrame) -> None:
         )
 
 
-# Bloom-sketch parameters for the approximate-then-verify path
-# (strategy 2): bits per capture value-set sketch, as 64-bit words.
-SKETCH_WORDS = 4  # 256 bits
-
-
-def capture_value_sketches(capf: DataFrame) -> DataFrame:
-    """Per-capture Bloom bitmask of its join-value set: 256 bits, one
-    hash function, built as a JVM-side ``bit_or`` aggregate.  The
-    Spark-native form of the reference's per-capture-set Bloom filters
-    (``data/ApproximateCindSet.scala:8-12``, built in
-    ``CreateAllHalfApproximateCindCandidates.scala:21-137``): value-set
-    inclusion a ⊆ b implies bits(a) & ~bits(b) == 0, so the bitmask
-    test admits false positives but never drops a true inclusion."""
-    pos = F.pmod(F.xxhash64("jv1", "jv2"), F.lit(64 * SKETCH_WORDS))
-    word = F.floor(pos / 64)
-    bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), pmod(xxhash64(jv1, jv2), {64 * SKETCH_WORDS}) % 64)")
-    return capf.groupBy("h1", "h2").agg(
-        *[
-            F.bit_or(F.when(word == w, bit).otherwise(F.lit(0))).alias(f"s{w}")
-            for w in range(SKETCH_WORDS)
-        ]
-    )
-
-
-def _sketch_contained(prefix_in: str, prefix_out: str) -> Column:
-    """bits(in) ⊆ bits(out) across all sketch words."""
-    return reduce(
-        lambda x, y: x & y,
-        [
-            F.col(f"{prefix_in}_s{w}").bitwiseAND(
-                F.bitwise_not(F.col(f"{prefix_out}_s{w}"))
-            )
-            == 0
-            for w in range(SKETCH_WORDS)
-        ],
-    )
-
-
-def _apply_sketch_filter(pairs: DataFrame, sketches: DataFrame) -> DataFrame:
-    """Drop pair rows whose captures cannot be in an inclusion in either
-    direction, per the broadcast value-set sketches — BEFORE the overlap
-    aggregate, so the shuffle+count only sees candidate pairs (the
-    reference's approximate round; the exact count afterwards is the
-    verify round).  Exact for CIND extraction: the test has no false
-    negatives.  Scale bound: the broadcast is #frequent × 44 B — beyond
-    ~50M frequent captures switch back to strategy 0/1 (or attach
-    sketches with a shuffle join)."""
-    sa = sketches.select(
-        F.col("h1").alias("a_h1"),
-        F.col("h2").alias("a_h2"),
-        *[F.col(f"s{w}").alias(f"a_s{w}") for w in range(SKETCH_WORDS)],
-    )
-    sb = sketches.select(
-        F.col("h1").alias("b_h1"),
-        F.col("h2").alias("b_h2"),
-        *[F.col(f"s{w}").alias(f"b_s{w}") for w in range(SKETCH_WORDS)],
-    )
-    out = (
-        pairs.join(F.broadcast(sa), on=["a_h1", "a_h2"])
-        .join(F.broadcast(sb), on=["b_h1", "b_h2"])
-        .filter(_sketch_contained("a", "b") | _sketch_contained("b", "a"))
-    )
-    return out.drop(
-        *[f"{s}_s{w}" for s in ("a", "b") for w in range(SKETCH_WORDS)]
-    )
-
-
 # ---- the hot-line kernel: the one hub-line mechanism of both CIND
 # engines (the reference's join-line rebalancing,
 # ``operators/AssignJoinLineRebalancing.scala:15-65``).  A join line is
@@ -344,7 +277,6 @@ def capture_overlaps(
     capf: DataFrame,
     frequent: DataFrame,
     min_overlap: int = 1,
-    sketches: DataFrame | None = None,
     hot_values: list | None = None,
     hot_overflow: DataFrame | None = None,
 ) -> DataFrame:
@@ -405,11 +337,11 @@ def capture_overlaps(
         hot_values, hot_overflow = hot_line_census(capf)
     if hot_values:
         ov = _cold_pair_counts_with_hot_masks(
-            capf, hot_values, min_overlap, sketches, overflow=hot_overflow
+            capf, hot_values, min_overlap, overflow=hot_overflow
         )
     else:
         # no hot lines at all — every line is narrow
-        ov = _grouped_pair_counts(capf, min_overlap, sketches)
+        ov = _grouped_pair_counts(capf, min_overlap)
     # ov is already unique per pair (every source ends in a groupBy on
     # the fixed-width hash keys), so no distinct on the restored
     # (long URI string) table is needed (that string-key distinct
@@ -421,7 +353,6 @@ def _cold_pair_counts_with_hot_masks(
     capf: DataFrame,
     hot_values: list,
     min_overlap: int,
-    sketches: DataFrame | None = None,
     overflow: DataFrame | None = None,
 ) -> DataFrame:
     """Pair overlap counts = cold-line pair counts + per-pair hot-line
@@ -462,7 +393,7 @@ def _cold_pair_counts_with_hot_masks(
     hot_keys = F.broadcast(_hot_keys(capf, hot_values))
     cold = capf.join(hot_keys, on=JV, how="left_anti")
     ov_cold = _grouped_pair_counts(
-        cold, max(1, min_overlap - n_hot), sketches, wide=overflow
+        cold, max(1, min_overlap - n_hot), wide=overflow
     ).withColumnRenamed("overlap", "cold_overlap")
     with_masks = ov_cold.join(
         F.broadcast(masks_as(masks, "a")), on=["a_h1", "a_h2"], how="left"
@@ -489,8 +420,7 @@ def _cold_pair_counts_with_hot_masks(
         F.broadcast(deep), on=["h1", "h2"], how="left_semi"
     )
     part2 = _grouped_pair_counts(
-        hot_rows, min_overlap, sketches,
-        wide=hot_keys if n_deep > HOT_LINE_K else None,
+        hot_rows, min_overlap, wide=hot_keys if n_deep > HOT_LINE_K else None
     )
     return (
         part1.unionByName(part2)
@@ -567,7 +497,6 @@ def _block_cells(lines: DataFrame, n_pair: int, left: str, right: str) -> DataFr
 def _grouped_pair_counts(
     capf: DataFrame,
     min_overlap: int,
-    sketches: DataFrame | None = None,
     wide: DataFrame | None = None,
 ) -> DataFrame:
     """Pair overlap counts of a capture table, the discovery's one pair
@@ -609,8 +538,6 @@ def _grouped_pair_counts(
     pairs = _cell_pairs(narrow)
     if wide is not None:
         pairs = pairs.unionByName(_cell_pairs(_block_cells(blocked, n_pair, "caps", "caps")))
-    if sketches is not None:
-        pairs = _apply_sketch_filter(pairs, sketches)
     # Pair counting WITHOUT map-side partial aggregation: pair keys are
     # mostly unique (the long tail), so partial aggregation shuffles the
     # same row count anyway but first burns a full hash-map build +
@@ -950,7 +877,6 @@ def discover_cinds(
     minimal: bool = True,
     ar_filter: bool = False,
     projection: str | None = None,
-    sketch_filter: bool = False,
 ) -> DataFrame:
     """End-to-end CIND discovery: triples → pertinent (support ≥
     min_support) CINDs, optionally minimal.  Output schema:
@@ -959,29 +885,11 @@ def discover_cinds(
     ``ar_filter``: drop 1/1 CINDs implied by confidence-1.0 association
     rules *before* the minimality pass (G17) — matching the reference's
     order, where AR-filtered CINDs can no longer act as minimality
-    killers (``plan/SmallToLargeTraversalStrategy.scala:80-87``).
-
-    ``sketch_filter``: the approximate-then-verify traversal (reference
-    strategy 2, ``plan/ApproximateAllAtOnceTraversalStrategy.scala:
-    19-124``, re-expressed): per-capture Bloom bitmasks of the value
-    sets prune non-inclusion pairs before the overlap aggregate, and the
-    exact count verifies the survivors — same exact result set (the
-    sketch test has false positives only, like the reference's Bloom
-    round)."""
+    killers (``plan/SmallToLargeTraversalStrategy.scala:80-87``)."""
     cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
         triples, min_support, projection
     )
-    # sketches are result-sized (#frequent × 44 B) and feed two
-    # broadcast builds per pair enumerator — materialize once with
-    # truncated lineage.
-    sketches = (
-        materialize(capture_value_sketches(capf))
-        if sketch_filter
-        else None
-    )
-    cands = capture_overlaps(
-        capf, frequent, min_overlap=min_support, sketches=sketches
-    )
+    cands = capture_overlaps(capf, frequent, min_overlap=min_support)
     # The dep/ref extraction references the overlap table twice (one
     # branch per direction); materializing the result-sized table first
     # stops the whole pair pipeline from running twice.  coalesce: the

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from rdfind_spark import condition_codes as cc
 from rdfind_spark.operators.census import condition_counts
+from rdfind_spark.util import materialize
 
 _UNARY = (cc.SUBJECT, cc.PREDICATE, cc.OBJECT)
 # binary primary code -> (low-bit field code, high-bit field code)
@@ -65,7 +66,9 @@ def association_rules(
 ) -> DataFrame:
     """Mine unary⇒unary association rules with support ≥ min_support and
     confidence ≥ min_confidence.  Output: (ante_code, cons_code,
-    antecedent, consequent, support, confidence)."""
+    antecedent, consequent, support, confidence), materialized: the
+    rule table is result-sized, and the corpus-sized condition census
+    it is built from is released before returning."""
     # counts feeds the unary side plus six directed branches below —
     # without persisting, each branch recomputes the full triple scan +
     # 6-way explode + aggregate (measured 7× at sf0.01).
@@ -100,11 +103,14 @@ def association_rules(
         )
     rules = reduce(lambda a, b: a.unionByName(b), directed)
     rules = rules.filter(F.col("support") >= min_support)
-    return (
+    out = materialize(
         rules.join(unary, on=["ante_code", "antecedent"])
         .withColumn("confidence", F.col("support") / F.col("ante_count"))
         .filter(F.col("confidence") >= min_confidence)
         .select(
             "ante_code", "cons_code", "antecedent", "consequent", "support", "confidence"
-        )
+        ),
+        "rules",
     )
+    counts.unpersist()
+    return out

@@ -201,12 +201,14 @@ def _verify_candidates(
     # safe, no line can melt a task and the plain exact join wins (skips
     # the mask joins, the cold/overflow split, and several instance-cache
     # scans).  Both counts come from one result-sized aggregate over the
-    # materialized candidate table.
-    _g = ch.select(
-        F.count_distinct("dep_h1", "dep_h2").alias("nd"),
-        F.count_distinct("ref_h1", "ref_h2").alias("nr"),
-    ).collect()[0]
-    plain = line_product_is_safe(_g.nd, _g.nr)
+    # materialized candidate table, collected only when the census found
+    # hot lines (without any, the plain join is the only path).
+    plain = not hot_values or line_product_is_safe(
+        *ch.select(
+            F.count_distinct("dep_h1", "dep_h2"),
+            F.count_distinct("ref_h1", "ref_h2"),
+        ).first()
+    )
     pair_keys = ch.select(*_PAIR_H)
     a = caps.join(
         F.broadcast(ch.select(F.col("dep_h1").alias("h1"), F.col("dep_h2").alias("h2")).distinct()),
@@ -229,7 +231,7 @@ def _verify_candidates(
             *_CIND_KEY, "support"
         )
 
-    if plain or not hot_values:
+    if plain:
         pairs = a.join(b, on=JV).join(F.broadcast(pair_keys), on=_PAIR_H)
         return _restore(
             pairs.groupBy(*_PAIR_H, "dep_support")
@@ -275,6 +277,29 @@ def _verify_candidates(
         )
         .filter(F.col("overlap") == F.col("dep_support"))
         .select(*_PAIR_H, F.col("dep_support").alias("support"))
+    )
+
+
+def _merged_ref_candidates(refs: DataFrame) -> DataFrame:
+    """Binary ref candidates: every two unary refs ``(ref_code,
+    ref_v1)`` of the same dep in ``refs`` that ``_merge_ok`` admits,
+    merged into one canonical binary ref (the 1/2 and 2/2 lattice
+    steps)."""
+    r1 = refs.select(
+        *_DEP_KEY, F.col("ref_code").alias("r1_code"), F.col("ref_v1").alias("r1_v1")
+    )
+    r2 = refs.select(
+        *_DEP_KEY, F.col("ref_code").alias("r2_code"), F.col("ref_v1").alias("r2_v1")
+    )
+    return (
+        r1.join(r2, on=_DEP_KEY)
+        .filter(_merge_ok(F.col("r1_code"), F.col("r2_code")))
+        .select(
+            *_DEP_KEY,
+            F.col("r1_code").bitwiseOR(F.col("r2_code")).alias("ref_code"),
+            F.col("r1_v1").alias("ref_v1"),
+            F.col("r2_v1").alias("ref_v2"),
+        )
     )
 
 
@@ -538,22 +563,7 @@ def discover_cinds_staged(
             F.col("dep_v1").alias("ref_v1"),
         )
     )
-    r1 = refs12.select(
-        *_DEP_KEY, F.col("ref_code").alias("r1_code"), F.col("ref_v1").alias("r1_v1")
-    )
-    r2 = refs12.select(
-        *_DEP_KEY, F.col("ref_code").alias("r2_code"), F.col("ref_v1").alias("r2_v1")
-    )
-    cand12 = (
-        r1.join(r2, on=_DEP_KEY)
-        .filter(_merge_ok(F.col("r1_code"), F.col("r2_code")))
-        .select(
-            *_DEP_KEY,
-            F.col("r1_code").bitwiseOR(F.col("r2_code")).alias("ref_code"),
-            F.col("r1_v1").alias("ref_v1"),
-            F.col("r2_v1").alias("ref_v2"),
-        )
-    )
+    cand12 = _merged_ref_candidates(refs12)
     # ---- stage 3 candidates: 2/1 — candidate deps merged from pairs of
     # directional rows sharing a ref.  ONE merge over partners = 1/1
     # CINDs ∪ proper overlaps covers both the exact 2/1 candidates
@@ -621,22 +631,7 @@ def discover_cinds_staged(
     refs22 = all21_seed.select(*_DEP_KEY, "ref_code", "ref_v1")
     for ident in ident21:
         refs22 = refs22.unionByName(ident)
-    s1 = refs22.select(
-        *_DEP_KEY, F.col("ref_code").alias("r1_code"), F.col("ref_v1").alias("r1_v1")
-    )
-    s2 = refs22.select(
-        *_DEP_KEY, F.col("ref_code").alias("r2_code"), F.col("ref_v1").alias("r2_v1")
-    )
-    cand22 = (
-        s1.join(s2, on=_DEP_KEY)
-        .filter(_merge_ok(F.col("r1_code"), F.col("r2_code")))
-        .select(
-            *_DEP_KEY,
-            F.col("r1_code").bitwiseOR(F.col("r2_code")).alias("ref_code"),
-            F.col("r1_v1").alias("ref_v1"),
-            F.col("r2_v1").alias("ref_v2"),
-        )
-    )
+    cand22 = _merged_ref_candidates(refs22)
 
     # ---- ONE combined evidence join for the 1/2 + 2/1 + 2/2 candidate
     # classes: all three are known before any verification (the 2/2
@@ -645,10 +640,7 @@ def discover_cinds_staged(
     # jv co-occurrence shuffle) that dwarf the marginal rows — r11
     # measured two ~15s calls → one ~13s call when 1/2+2/1 merged; r12
     # folds 2/2 in as well.  Only ``exact`` 2/1 candidates verify (the
-    # reference verifies proper × proper merges only); the classes are
-    # split back by dep/ref arity, which determines the class uniquely.
-    unary_dep = F.col("dep_code").isin(list(cc.VALID_UNARY_CODES))
-    unary_ref = F.col("ref_code").isin(list(cc.VALID_UNARY_CODES))
+    # reference verifies proper × proper merges only).
     verified = materialize(
         _verify_candidates(
             capf,
@@ -660,17 +652,9 @@ def discover_cinds_staged(
         ),
         "cind12_21_22",
     )
-    cind12 = verified.filter(unary_dep)
-    cind21 = verified.filter(~unary_dep & unary_ref)
-    cind22 = verified.filter(~unary_dep & ~unary_ref)
 
     # ---- union + minimality (shared with the all-at-once engine)
-    out = (
-        cind11.unionByName(cind12)
-        .unionByName(cind21)
-        .unionByName(cind22)
-        .filter(~structural_implies())
-    )
+    out = cind11.unionByName(verified).filter(~structural_implies())
     minimal = remove_implied_cinds(out)
     dcap_h.unpersist()
     capf.unpersist()

@@ -7,18 +7,13 @@ and subclasses), mapping each strategy id to its Spark implementation:
 ====  ==============================  =========================================
  0    AllAtOnceTraversalStrategy      ``operators.cind.discover_cinds``
  1    SmallToLargeTraversalStrategy   ``operators.staged.discover_cinds_staged``
- 2    ApproximateAllAtOnce...         ``discover_cinds(sketch_filter=True)``
- 3    LateBBTraversalStrategy         ``discover_cinds(sketch_filter=True)`` —
-                                      LateBB is the approximate family's
-                                      variant that staggers WHEN ref-sets
-                                      become Bloom bits to bound reducer
-                                      memory (``plan/LateBBTraversal
-                                      Strategy.scala``), a concern the
-                                      relational formulation does not have
-                                      (no per-key ref arrays; Spark hash
-                                      aggs spill), so it degenerates to the
-                                      sketch-prefilter path like strategy 2
+ 2    ApproximateAllAtOnce...         ``discover_cinds`` (as 0)
+ 3    LateBBTraversalStrategy         ``discover_cinds`` (as 0)
 ====  ==============================  =========================================
+
+Strategies 2 and 3, the reference's Bloom-prefilter-then-verify family,
+run the exact path of 0: pair emission is relational, so a prefilter
+cannot skip it (SURVEY §4).  They keep their ids and ``minimal=False``.
 
 All strategies return the identical exact CIND set (cross-checked by the
 driver oracle and the property tests in ``tests/test_cind_engine.py``).
@@ -51,7 +46,6 @@ def traversal(
             minimal=minimal,
             ar_filter=ar_filter,
             projection=projection,
-            sketch_filter=strategy in (2, 3),
         )
     if strategy == 1:
         if not minimal:

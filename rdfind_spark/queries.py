@@ -89,13 +89,12 @@ def cind_small_to_large(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("cind_approx_verify", oracle.cind_sql(MIN_SUPPORT, minimal=True))
 def cind_approx_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate-then-verify traversal (reference strategy 2,
-    ``plan/ApproximateAllAtOnceTraversalStrategy.scala``, re-expressed
-    with Spark-native Bloom bitmask sketches): exact result, so it
-    shares cind_minimal's oracle — the driver's check doubles as the
-    strategy-agreement test."""
-    return discover_cinds(
-        triple_view(spark, sf_dir), MIN_SUPPORT, minimal=True, sketch_filter=True
-    )
+    ``plan/ApproximateAllAtOnceTraversalStrategy.scala``), run the way
+    the CLI runs it: through the strategy facade, which maps it to the
+    exact all-at-once path.  Same oracle as cind_minimal."""
+    from rdfind_spark.plans import traversal
+
+    return traversal(triple_view(spark, sf_dir), strategy=2, min_support=MIN_SUPPORT)
 
 
 def _zipf_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

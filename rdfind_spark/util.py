@@ -83,7 +83,7 @@ def null_sensitive_cmp(a, b) -> int:
 def materialize(df, label: str = ""):
     """Cut lineage and pin ``df``'s current result — the engine's one
     stage-materialization primitive (iterative loops, staged lattices,
-    reused sketch tables all go through here).  Each staged-lattice
+    reused hot-line mask tables all go through here).  Each staged-lattice
     stage references earlier stages several times (self-joins,
     probe/killer expansions); with a lazy persist the *logical plan*
     still nests exponentially and the driver runs out of memory just

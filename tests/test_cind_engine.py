@@ -502,82 +502,17 @@ def test_hot_only_pairs_exact_with_tiny_hot_threshold(spark, monkeypatch):
     assert got
 
 
-# ------------------------------------------- approximate-then-verify
-
-
-def test_sketch_filter_strategy_matches_brute_force(spark):
-    """Strategy 2 (Bloom-sketch prefilter + exact verify) returns the
-    exact CIND set on TINY and on a hot-line fixture — the sketch test
-    has false positives only (reference strategy 2 re-expressed)."""
-    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
-    got = {
-        tuple(r)
-        for r in discover_cinds(
-            df, min_support=2, minimal=True, sketch_filter=True
-        ).collect()
-    }
-    assert got == brute_cinds(TINY, min_support=2, minimal=True)
-
-    triples = []
-    for i in range(40):
-        triples.append((f"x{i}", "p", "hub"))
-        triples += [(f"x{i}", "p", f"o{i}_{j}") for j in range(12)]
-    df2 = spark.createDataFrame(triples, ["subj", "pred", "obj"])
-    got2 = {
-        tuple(r)
-        for r in discover_cinds(
-            df2, min_support=10, minimal=False, sketch_filter=True
-        ).collect()
-    }
-    assert got2 == brute_cinds(triples, min_support=10, minimal=False)
-
-
-def test_value_sketch_containment_semantics(spark):
-    """bits(a) ⊆ bits(b) whenever values(a) ⊆ values(b)."""
-    from rdfind_spark.operators.cind import SKETCH_WORDS, capture_value_sketches
-
-    freq, capf = capture_tables(spark, TINY, 2)
-    sk = {
-        (r.h1, r.h2): tuple(r[f"s{w}"] for w in range(SKETCH_WORDS))
-        for r in capture_value_sketches(capf).collect()
-    }
-    import pyspark.sql.functions as F
-
-    keyed = {
-        (r.code, r.v1, r.v2): (r.h1, r.h2)
-        for r in freq.select(
-            "code", "v1", "v2",
-            F.xxhash64("code", "v1", "v2").alias("h1"),
-            F.hash("code", "v1", "v2").alias("h2"),
-        ).collect()
-    }
-    sets = brute_capture_sets(TINY)
-    checked = 0
-    for dep, dset in sets.items():
-        for ref, rset in sets.items():
-            if dep == ref or dep not in keyed or ref not in keyed:
-                continue
-            if dset <= rset:
-                a, b = sk[keyed[dep]], sk[keyed[ref]]
-                assert all((x & ~y) == 0 for x, y in zip(a, b)), (dep, ref)
-                checked += 1
-    assert checked > 0
-
-
 # -------------------------------------------- degenerate & property
 
 
 def test_min_support_above_data_yields_empty(spark):
     """All strategies must return an empty (not failing) result when no
     capture reaches min_support."""
-    from rdfind_spark.operators.staged import discover_cinds_staged
+    from rdfind_spark.plans import traversal
 
     df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
-    assert discover_cinds(df, min_support=10_000).count() == 0
-    assert (
-        discover_cinds(df, min_support=10_000, sketch_filter=True).count() == 0
-    )
-    assert discover_cinds_staged(df, min_support=10_000).count() == 0
+    for s in (0, 1, 2, 3):
+        assert traversal(df, strategy=s, min_support=10_000).count() == 0, s
 
 
 def test_property_random_triples_all_strategies_agree(spark):
@@ -585,7 +520,7 @@ def test_property_random_triples_all_strategies_agree(spark):
     tiny alphabet, every strategy reproduces the brute-force oracle."""
     from hypothesis import given, settings, strategies as st
 
-    from rdfind_spark.operators.staged import discover_cinds_staged
+    from rdfind_spark.plans import traversal
 
     triple_st = st.lists(
         st.tuples(
@@ -602,22 +537,12 @@ def test_property_random_triples_all_strategies_agree(spark):
     def check(triples):
         expected = brute_cinds(triples, min_support=2, minimal=True)
         df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
-        got0 = {
-            tuple(r) for r in discover_cinds(df, min_support=2).collect()
-        }
-        got1 = {
-            tuple(r)
-            for r in discover_cinds_staged(df, min_support=2).collect()
-        }
-        got2 = {
-            tuple(r)
-            for r in discover_cinds(
-                df, min_support=2, sketch_filter=True
-            ).collect()
-        }
-        assert got0 == expected
-        assert got1 == expected
-        assert got2 == expected
+        for s in (0, 1, 2, 3):
+            got = {
+                tuple(r)
+                for r in traversal(df, strategy=s, min_support=2).collect()
+            }
+            assert got == expected, s
 
     check()
 

@@ -76,10 +76,11 @@ def test_pair_stage_groups_lines_no_self_join(spark, sf_dir):
 
 
 def test_traversal_dispatch(spark):
-    """Strategy 3 (LateBB) must route to the sketch path like strategy 2
-    — the reference's LateBBTraversalStrategy is an approximate-family
-    variant (plan/LateBBTraversalStrategy.scala), NOT small-to-large —
-    and every strategy must agree on the tiny fixture."""
+    """Strategies 2 and 3 (the reference's approximate family,
+    plan/ApproximateAllAtOnceTraversalStrategy.scala and
+    plan/LateBBTraversalStrategy.scala — NOT small-to-large) run the
+    exact all-at-once path like strategy 0, and every strategy must
+    agree on the tiny fixture."""
     import warnings
 
     from rdfind_spark.plans import traversal
@@ -97,7 +98,7 @@ def test_traversal_dispatch(spark):
         warnings.simplefilter("always")
         traversal(df, strategy=1, min_support=2, minimal=False)
         assert any("minimal" in str(w.message) for w in caught)
-    # but strategy 3 honors it (sketch path supports the full set)
+    # but strategy 3 honors it (the all-at-once path emits the full set)
     full = {
         tuple(r)
         for r in traversal(df, strategy=3, min_support=2, minimal=False).collect()

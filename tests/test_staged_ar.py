@@ -122,6 +122,33 @@ def test_ar_filter_drops_rule_implied_cinds(spark):
     assert filtered < plain
 
 
+def test_association_rules_leaves_no_cached_table(spark):
+    """association_rules persists its corpus-sized condition census for
+    its seven branches; it must release it and return the result-sized
+    rule table materialized, so Spark's CacheManager ends empty."""
+    from rdfind_spark.session import drop_cached
+
+    drop_cached(spark)
+    triples = [(f"a{i}", "p1", "x") for i in range(5)]
+    rules = association_rules(spark.createDataFrame(triples, ["subj", "pred", "obj"]), 2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert rules.count() > 0
+
+
+def test_staged_verify_skips_hub_gate_without_hot_lines(spark, monkeypatch):
+    """With no hot line the plain verify join is the only path, so the
+    evidence verify must not collect the hub gate's candidate census."""
+    from rdfind_spark.operators import staged
+
+    def gate(n_a, n_b):
+        raise AssertionError("hub gate evaluated without hot lines")
+
+    monkeypatch.setattr(staged, "line_product_is_safe", gate)
+    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
+    got = _as_set(discover_cinds_staged(df, min_support=2))
+    assert got == brute_cinds(TINY, min_support=2, minimal=True)
+
+
 def _duckdb_with_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
