@@ -538,12 +538,14 @@ def _grouped_pair_counts(
     pairs = _cell_pairs(narrow)
     if wide is not None:
         pairs = pairs.unionByName(_cell_pairs(_block_cells(blocked, n_pair, "caps", "caps")))
-    # Pair counting WITHOUT map-side partial aggregation: pair keys are
-    # mostly unique (the long tail), so partial aggregation shuffles the
-    # same row count anyway but first burns a full hash-map build +
-    # spill-sort per task.  Repartitioning by the pair key first makes
-    # the child partitioning satisfy the aggregation's distribution
-    # requirement, so Catalyst plans a single complete-mode
+    # Pair counting WITHOUT map-side partial aggregation.  Pair keys
+    # repeat (emissions : distinct pairs, perfbench inputs: TPC-H star
+    # over the full capf 1,061,823 : 45,940, 23:1; zipf_hubs cold lines
+    # 3,726,370 : 1,838,031, 2:1), but a partial aggregate measured
+    # -4 % discover_s on tpch_staged and flat-to-worse on zipf_hubs, so
+    # the one complete-mode aggregate stays.  Repartitioning by the pair
+    # key first makes the child partitioning satisfy the aggregation's
+    # distribution requirement, so Catalyst plans a single complete-mode
     # HashAggregate over fixed-width 4-integer keys.
     ov = (
         pairs.select(*PKEY)
@@ -636,21 +638,30 @@ def extract_cinds(cands: DataFrame) -> DataFrame:
     return cinds.filter(~structural_implies())
 
 
-def _dep_generalization_probe(cinds: DataFrame) -> DataFrame:
-    """For each binary-dep CIND, rows keyed by (unary generalization of
-    dep, same ref) — the keys a more-general CIND would occupy."""
-    probes = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("dep_v1") if value_index == 1 else F.col("dep_v2")
-            probes.append(
-                cinds.filter(F.col("dep_code") == bcode).select(
-                    "*",
+def capture_generalizations(code: str, v1: str, v2: str) -> Column:
+    """``array<struct<g_code int, g_v1 string>>``: the unary
+    generalizations of the capture in columns ``code``, ``v1``, ``v2``
+    (``cc.GENERALIZATION_MAP``, one CASE branch per binary code), empty
+    for a unary capture.  An explode over it replaces a union of one
+    filtered copy per (binary code, generalization): one scan, no
+    six-branch Union in the plan."""
+
+    def gens(bcode: int) -> Column:
+        return F.array(
+            *[
+                F.struct(
                     F.lit(ucode).alias("g_code"),
-                    kept.alias("g_v1"),
+                    F.col(v1 if value_index == 1 else v2).alias("g_v1"),
                 )
-            )
-    return reduce(lambda x, y: x.unionByName(y), probes)
+                for ucode, value_index in cc.GENERALIZATION_MAP[bcode]
+            ]
+        )
+
+    cases = [(F.col(code) == bcode, gens(bcode)) for bcode in cc.GENERALIZATION_MAP]
+    out = F.when(*cases[0])
+    for cond, value in cases[1:]:
+        out = out.when(cond, value)
+    return out.otherwise(F.array().cast("array<struct<g_code:int,g_v1:string>>"))
 
 
 def remove_implied_cinds(cinds: DataFrame) -> DataFrame:
@@ -659,25 +670,26 @@ def remove_implied_cinds(cinds: DataFrame) -> DataFrame:
     binary dep with the same ref; (b) narrower referenced: a CIND with
     my dep and a binary ref refining my unary ref.  Mirrors the four
     anti-joins of the reference (``plan/TraversalStrategy.scala:121-168``)
-    in two expansions, both against the full emitted set.
+    with two generators (``capture_generalizations`` of the dep for (a),
+    of the ref for (b)), both against the full emitted set.
 
     The input is eagerly materialized with its lineage TRUNCATED
-    (``localCheckpoint``) first: this function references ``cinds`` a
-    dozen times (probe + killer branches), and with plain persist each
-    branch still carries a full copy of the upstream pair-join pipeline
-    in the logical plan — multi-megabyte plan trees that Catalyst
-    re-analyzes and the driver re-stringifies per action.  The CIND set
-    is result-sized (orders of magnitude smaller than the data), so
-    checkpointing stays cheap at any scale.  The checkpointed input is
-    released once the (equally checkpointed) result exists."""
+    (``localCheckpoint``) first: this function references ``cinds``
+    several times (probe, killer and anti-join branches), and with plain
+    persist each branch still carries a full copy of the upstream
+    pair-join pipeline in the logical plan — multi-megabyte plan trees
+    that Catalyst re-analyzes and the driver re-stringifies per action.
+    The CIND set is result-sized (orders of magnitude smaller than the
+    data), so checkpointing stays cheap at any scale.  The checkpointed
+    input is released once the (equally checkpointed) result exists."""
     cinds = materialize(cinds)
     all_cols = cinds.columns
-    # The whole pass (6 probe expansions, 2 killer builds, a distinct,
-    # a final anti-join) runs over the RESULT-SIZED materialized CIND
-    # table; inheriting the session's corpus-sized shuffle.partitions
-    # costs hundreds of near-empty tasks per branch (r11 timeline:
-    # ~18 s wall on a ~50k-row table).  Pin to the measured size (the
-    # loop_shuffle_partitions rule); the count is a cache scan.
+    # The whole pass (two generator scans, two semi/anti-joins) runs over
+    # the RESULT-SIZED materialized CIND table; inheriting the session's
+    # corpus-sized shuffle.partitions costs hundreds of near-empty tasks
+    # per branch (r11 timeline: ~18 s wall on a ~50k-row table).  Pin to
+    # the measured size (the loop_shuffle_partitions rule); the count is
+    # a cache scan.
     from rdfind_spark.util import loop_shuffle_partitions
 
     # materialize INSIDE the pinned scope: shuffle.partitions is read
@@ -700,54 +712,35 @@ def remove_implied_cinds(cinds: DataFrame) -> DataFrame:
 
 
 def _remove_implied_pinned(cinds: DataFrame, all_cols: list) -> DataFrame:
-
-    # (a) binary dep implied by unary-dep CIND with same ref
+    ref_key = ["ref_code", "ref_v1", "ref_v2"]
+    # (a) binary dep implied by a unary-dep CIND with the same ref: probe
+    # each dep generalization against the unary-dep CINDs
     killers_a = cinds.select(
-        F.col("dep_code").alias("g_code"),
-        F.col("dep_v1").alias("g_v1"),
-        "ref_code",
-        "ref_v1",
-        "ref_v2",
+        F.col("dep_code").alias("g_code"), F.col("dep_v1").alias("g_v1"), *ref_key
     ).filter(F.col("g_code").isin(list(cc.VALID_UNARY_CODES)))
     bad_a = (
-        _dep_generalization_probe(cinds)
-        .join(killers_a, on=["g_code", "g_v1", "ref_code", "ref_v1", "ref_v2"], how="left_semi")
-        .select(*all_cols)
-    )
-
-    # (b) unary ref implied by binary-ref CIND with same dep
-    killer_keys_b = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("ref_v1") if value_index == 1 else F.col("ref_v2")
-            killer_keys_b.append(
-                cinds.filter(F.col("ref_code") == bcode).select(
-                    F.col("dep_code").alias("k_dep_code"),
-                    F.col("dep_v1").alias("k_dep_v1"),
-                    F.col("dep_v2").alias("k_dep_v2"),
-                    F.lit(ucode).alias("k_ref_code"),
-                    kept.alias("k_ref_v1"),
-                )
-            )
-    killers_b = reduce(lambda x, y: x.unionByName(y), killer_keys_b)
-    bad_b = (
-        cinds.filter(F.col("ref_code").isin(list(cc.VALID_UNARY_CODES)))
-        .join(
-            killers_b,
-            on=[
-                F.col("dep_code") == F.col("k_dep_code"),
-                F.col("dep_v1") == F.col("k_dep_v1"),
-                F.col("dep_v2") == F.col("k_dep_v2"),
-                F.col("ref_code") == F.col("k_ref_code"),
-                F.col("ref_v1") == F.col("k_ref_v1"),
-            ],
-            how="left_semi",
+        cinds.select(
+            *all_cols,
+            F.inline(capture_generalizations("dep_code", "dep_v1", "dep_v2")),
         )
+        .join(killers_a, on=["g_code", "g_v1", *ref_key], how="left_semi")
         .select(*all_cols)
     )
-
-    bad = bad_a.unionByName(bad_b).distinct()
-    return cinds.join(bad, on=all_cols, how="left_anti")
+    # (b) unary ref implied by a binary-ref CIND with the same dep: each
+    # binary ref generalizes to the unary (ref_code, ref_v1) it kills
+    killed_b = cinds.select(
+        "dep_code",
+        "dep_v1",
+        "dep_v2",
+        F.inline(capture_generalizations("ref_code", "ref_v1", "ref_v2")).alias(
+            "ref_code", "ref_v1"
+        ),
+    )
+    return cinds.join(bad_a, on=all_cols, how="left_anti").join(
+        killed_b,
+        on=["dep_code", "dep_v1", "dep_v2", "ref_code", "ref_v1"],
+        how="left_anti",
+    )
 
 
 def _hashed_instances(cand: DataFrame) -> DataFrame:
@@ -783,6 +776,19 @@ def _frequent_strings(cand: DataFrame, freq_h: DataFrame) -> DataFrame:
     )
 
 
+def _frequent_hashes(hashed: DataFrame, min_support: int) -> DataFrame:
+    """(h1, h2, support) of the frequent captures of ``_hashed_instances``
+    rows, lazily: the support is ONE count-distinct aggregate over the
+    (capture, join value) hash pairs — Spark plans the dedup and the
+    count in a single fused aggregation, measured faster than an
+    explicit distinct()+groupBy chain."""
+    return (
+        hashed.groupBy("h1", "h2")
+        .agg(F.count_distinct("jv1", "jv2").alias("support"))
+        .filter(F.col("support") >= min_support)
+    )
+
+
 def build_capture_tables(
     triples: DataFrame,
     min_support: int = 10,
@@ -790,10 +796,14 @@ def build_capture_tables(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """The shared hashed-prefix pipeline of every CIND engine entry:
     returns ``(cand, dcap_h, freq_h, frequent, capf)`` with the last
-    four PERSISTED (MEMORY_AND_DISK).  Callers unpersist what they took
-    when done.
+    three PERSISTED (MEMORY_AND_DISK).  Callers unpersist what they took
+    when done.  ``dcap_h``, the distinct hashed (join value, capture)
+    instances, is lazy and never cached: the prefix reads the
+    candidates twice (supports, then ``capf``) instead of caching a
+    corpus-sized distinct, and only a caller that wants the distinct
+    count pays for it.
 
-    The whole bulk pipeline (distinct, support counts, pair join) runs
+    The whole bulk pipeline (support counts, distinct, pair join) runs
     on 96-bit hashes of BOTH the join value and the capture key:
     shuffles move fixed-width integer rows instead of URI strings
     (measured 2.5x on the distinct+support stages at sf0.1), and
@@ -801,33 +811,28 @@ def build_capture_tables(
     This is the reference's dictionary compression (T7-T9,
     ``operators/ConditionCompressor.scala``) applied wholesale.
 
-    Build order: ``dcap_h.count()``, then ``capf.count()``, which also
-    builds ``freq_h``; ``frequent`` stays lazy and its first reader
-    builds it.  Leaving stacked caches lazy lets the first downstream
-    job's AQE materialize the TableCacheQueryStages CONCURRENTLY, and
-    when one cache's build plan contains another unbuilt cache, the
-    builds can circular-wait — a race-dependent driver deadlock
-    (observed).  After the two counts ``frequent`` is the only unbuilt
-    cache, and its plan reads no other unbuilt one."""
+    Build order: ``capf.count()`` builds ``freq_h`` too; ``frequent``
+    stays lazy and its first reader builds it.  Leaving stacked caches
+    lazy lets the first downstream job's AQE materialize the
+    TableCacheQueryStages CONCURRENTLY, and when one cache's build plan
+    contains another unbuilt cache, the builds can circular-wait — a
+    race-dependent driver deadlock (observed).  After the count
+    ``frequent`` is the only unbuilt cache, and its plan reads no other
+    unbuilt one."""
     cand = capture_candidates(triples, projection)
     if os.environ.get("RDFIND_SPARK_CHECK_HASHES"):
         assert_hash_injective(cand)
-    dcap_h = _hashed_instances(cand).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    dcap_h.count()
-    freq_h = (
-        dcap_h.groupBy("h1", "h2")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= min_support)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    hashed = _hashed_instances(cand)
+    freq_h = _frequent_hashes(hashed, min_support).persist(StorageLevel.MEMORY_AND_DISK)
     frequent = _frequent_strings(cand, freq_h).persist(StorageLevel.MEMORY_AND_DISK)
     capf = (
-        dcap_h.join(F.broadcast(freq_h), on=["h1", "h2"])
+        hashed.join(F.broadcast(freq_h), on=["h1", "h2"])
         .select("jv1", "jv2", "h1", "h2", "support")
+        .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     capf.count()
-    return cand, dcap_h, freq_h, frequent, capf
+    return cand, hashed.distinct(), freq_h, frequent, capf
 
 
 def frequent_capture_supports(
@@ -841,10 +846,8 @@ def frequent_capture_supports(
     prefix of ``build_capture_tables`` only adds cache-write cost and
     driver job barriers (measured ~25s vs ~13s at sf0.1).
 
-    Plan shape: (1) supports via ONE count-distinct aggregate over the
-    96-bit (capture, value) hash pairs — Spark plans the dedup and the
-    count in a single fused aggregation, measured faster than an
-    explicit distinct()+groupBy chain; (2) strings restored by a second
+    Plan shape: (1) supports from ``_frequent_hashes``, the prefix's one
+    count-distinct aggregate; (2) strings restored by a second
     hash-only scan broadcast-joined to the (result-sized) frequent
     supports, deduped by a group-by-all-columns distinct — at most one
     string tuple per capture per map partition rides the shuffle, and
@@ -862,13 +865,7 @@ def frequent_capture_supports(
     aggregates under count, hiding the string cost.)
     """
     cand = capture_candidates(triples, projection)
-    freq_h = (
-        _hashed_instances(cand)
-        .groupBy("h1", "h2")
-        .agg(F.count_distinct("jv1", "jv2").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
-    return _frequent_strings(cand, freq_h)
+    return _frequent_strings(cand, _frequent_hashes(_hashed_instances(cand), min_support))
 
 
 def discover_cinds(
@@ -886,7 +883,7 @@ def discover_cinds(
     rules *before* the minimality pass (G17) — matching the reference's
     order, where AR-filtered CINDs can no longer act as minimality
     killers (``plan/SmallToLargeTraversalStrategy.scala:80-87``)."""
-    cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
+    _cand, _dcap_h, freq_h, frequent, capf = build_capture_tables(
         triples, min_support, projection
     )
     cands = capture_overlaps(capf, frequent, min_overlap=min_support)
@@ -899,10 +896,9 @@ def discover_cinds(
     cands = cands.coalesce(triples.sparkSession.sparkContext.defaultParallelism)
     cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
     cands.count()
-    # All four shared tables are dead once the overlap table is
+    # All three shared tables are dead once the overlap table is
     # materialized — leaking them was measured to slow the NEXT query
     # in the same session >10x (executor memory pressure).
-    dcap_h.unpersist()
     capf.unpersist()
     freq_h.unpersist()
     frequent.unpersist()
@@ -916,8 +912,7 @@ def discover_cinds(
         cinds = filter_ar_implied_cinds(
             cinds, association_rules(triples, min_support, 1.0)
         )
-    if minimal:
-        # the minimal set is checkpointed, so the overlap table is dead
-        cinds = remove_implied_cinds(cinds)
-        cands.unpersist()
+    # either result is checkpointed, so the overlap table is dead
+    cinds = remove_implied_cinds(cinds) if minimal else materialize(cinds)
+    cands.unpersist()
     return cinds

@@ -63,6 +63,7 @@ from rdfind_spark.operators.cind import (
     JV,
     PKEY,
     build_capture_tables,
+    capture_generalizations,
     capture_hash,
     capture_overlaps,
     cold_line_join,
@@ -326,19 +327,9 @@ def _merged_dep_candidates(
     binary per frequent value of its field, so that probe's fan-out
     (rows × binaries-per-unary, measured 47s) dwarfs the pair join
     (~18s) on Zipfian predicates."""
-    gen_branches = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("dep_v1") if value_index == 1 else F.col("dep_v2")
-            gen_branches.append(
-                allowed_deps.filter(F.col("dep_code") == bcode).select(
-                    F.lit(ucode).alias("dep_code"), kept.alias("dep_v1")
-                )
-            )
-    gen_deps = gen_branches[0]
-    for g in gen_branches[1:]:
-        gen_deps = gen_deps.unionByName(g)
-    gen_deps = gen_deps.distinct()
+    gen_deps = allowed_deps.select(
+        F.inline(capture_generalizations(*_DEP_KEY)).alias("dep_code", "dep_v1")
+    ).distinct()
 
     def _mergeable(df: DataFrame) -> DataFrame:
         return df.join(
@@ -469,7 +460,7 @@ def discover_cinds_staged(
     # support counts / every verify join move only 96-bit hash pairs;
     # capture strings are restored once for the result-sized frequent
     # set, and candidate strings live only in the lattice tables.
-    _cand, dcap_h, freq_h, frequent, capf = build_capture_tables(
+    _cand, _dcap_h, freq_h, frequent, capf = build_capture_tables(
         triples, min_support, projection
     )
     # ONE full-line hot census (the kernel's bounded collect) shared by
@@ -614,23 +605,15 @@ def discover_cinds_staged(
     # own unary generalizations (dep_b ⊆ gen(dep_b) is structural, so
     # no 2/1 row supplies it) — augment the ref pool with each dep's
     # generalization captures.
-    ident21 = []
-    for bcode, gens in cc.GENERALIZATION_MAP.items():
-        for ucode, value_index in gens:
-            kept = F.col("dep_v1") if value_index == 1 else F.col("dep_v2")
-            ident21.append(
-                all21_seed.select(*_DEP_KEY)
-                .distinct()
-                .filter(F.col("dep_code") == bcode)
-                .select(
-                    *_DEP_KEY,
-                    F.lit(ucode).alias("ref_code"),
-                    kept.alias("ref_v1"),
-                )
-            )
-    refs22 = all21_seed.select(*_DEP_KEY, "ref_code", "ref_v1")
-    for ident in ident21:
-        refs22 = refs22.unionByName(ident)
+    ident21 = (
+        all21_seed.select(*_DEP_KEY)
+        .distinct()
+        .select(
+            *_DEP_KEY,
+            F.inline(capture_generalizations(*_DEP_KEY)).alias("ref_code", "ref_v1"),
+        )
+    )
+    refs22 = all21_seed.select(*_DEP_KEY, "ref_code", "ref_v1").unionByName(ident21)
     cand22 = _merged_ref_candidates(refs22)
 
     # ---- ONE combined evidence join for the 1/2 + 2/1 + 2/2 candidate
@@ -656,7 +639,6 @@ def discover_cinds_staged(
     # ---- union + minimality (shared with the all-at-once engine)
     out = cind11.unionByName(verified).filter(~structural_implies())
     minimal = remove_implied_cinds(out)
-    dcap_h.unpersist()
     capf.unpersist()
     freq_h.unpersist()
     frequent.unpersist()

@@ -560,3 +560,82 @@ def test_hash_injectivity_census(spark, monkeypatch):
     monkeypatch.setenv("RDFIND_SPARK_CHECK_HASHES", "1")
     got = spark_cinds(spark, TINY, min_support=2, minimal=True)
     assert got == brute_cinds(TINY, min_support=2, minimal=True)
+
+
+# ------------------------------------------- generalizations and prefix
+
+
+def test_capture_generalizations_match_generalization_map(spark):
+    """One row per valid code: each binary code explodes to exactly its
+    ``GENERALIZATION_MAP`` entries (value1 or value2 kept), each of the
+    six unary codes to nothing."""
+    from pyspark.sql import functions as F
+
+    from rdfind_spark.operators.cind import capture_generalizations
+
+    rows = [(c, "x", "y" if c in cc.VALID_BINARY_CODES else "") for c in sorted(cc.VALID_CODES)]
+    df = spark.createDataFrame(rows, "code int, v1 string, v2 string")
+    gens = df.select("code", F.inline(capture_generalizations("code", "v1", "v2")))
+    got: dict[int, list] = {}
+    for r in gens.collect():
+        got.setdefault(r.code, []).append((r.g_code, r.g_v1))
+    assert {c: sorted(g) for c, g in got.items()} == {
+        b: sorted((u, "x" if i == 1 else "y") for u, i in g)
+        for b, g in cc.GENERALIZATION_MAP.items()
+    }
+    assert len(cc.VALID_UNARY_CODES) == 6 and not set(got) & cc.VALID_UNARY_CODES
+    assert gens.schema.simpleString() == "struct<code:int,g_code:int,g_v1:string>"
+
+
+def test_minimality_plan_has_no_union(spark, monkeypatch):
+    """Both minimality directions expand generalizations with one
+    generator each, so the pass's captured plan holds no Union."""
+    from rdfind_spark import util
+    from rdfind_spark.operators.cind import remove_implied_cinds
+
+    monkeypatch.setattr(util, "PLAN_CAPTURE", {})
+    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
+    out = remove_implied_cinds(discover_cinds(df, min_support=2, minimal=False))
+    assert {tuple(r) for r in out.collect()} == brute_cinds(TINY, 2, minimal=True)
+    assert "Union" not in util.PLAN_CAPTURE["minimality"]
+
+
+def test_capture_prefix_caches_no_distinct_instances(spark):
+    """The prefix caches ``freq_h``, ``frequent`` and ``capf`` only; the
+    distinct hashed instances it returns stay lazy."""
+    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
+    _, dcap_h, freq_h, frequent, capf = build_capture_tables(df, 2)
+    try:
+        assert not dcap_h.is_cached
+        assert freq_h.is_cached and frequent.is_cached and capf.is_cached
+        assert capf.count() == capf.distinct().count()
+    finally:
+        for t in (capf, freq_h, frequent):
+            t.unpersist()
+
+
+def test_capture_prefix_frequent_matches_support_census(spark, sf_dir):
+    """The prefix's ``frequent`` is the standalone support census."""
+    from rdfind_spark.operators.cind import frequent_capture_supports
+
+    triples = triple_view(spark, sf_dir)
+    _, _, freq_h, frequent, capf = build_capture_tables(triples, 10)
+    try:
+        got = sorted(tuple(r) for r in frequent.collect())
+    finally:
+        for t in (capf, freq_h, frequent):
+            t.unpersist()
+    assert got
+    assert got == sorted(tuple(r) for r in frequent_capture_supports(triples, 10).collect())
+
+
+def test_nonminimal_discovery_leaves_no_cached_table(spark):
+    """``minimal=False`` returns its CIND set materialized and releases
+    the persisted overlap table, as the minimal branch does."""
+    from rdfind_spark.plans import traversal
+    from rdfind_spark.session import drop_cached
+
+    drop_cached(spark)
+    df = spark.createDataFrame(TINY, ["subj", "pred", "obj"])
+    assert traversal(df, strategy=0, min_support=2, minimal=False).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
