@@ -29,10 +29,11 @@ triples (``sources.triples.triple_view``).
 
 Flag parity map (reference ``Parameters`` → here):
   ``--support``             → ``--support`` (default 10)
-  ``--traversal-strategy``  → 0 = all-at-once, 1 = small-to-large,
-                              2 = approximate-then-verify, 3 = LateBB
-                              (both = the exact all-at-once path, see
-                              plans facade); default 1, like the reference
+  ``--traversal-strategy``  → 0 = all-at-once, 1 = small-to-large
+                              (always minimal), 2 = approximate-then-
+                              verify, 3 = LateBB (all four run the exact
+                              all-at-once path, see plans facade);
+                              default 1, like the reference
   ``--use-ar``              → ``--use-ar`` (G17 filter)
   ``--projection``          → ``--projection`` (subset of "spo")
   ``--distinct-triples``    → ``--distinct-triples`` (T4)
@@ -471,9 +472,9 @@ def make_parser() -> argparse.ArgumentParser:
     p.add_argument("--support", type=int, default=10)
     p.add_argument("--traversal-strategy", type=int, choices=(0, 1, 2, 3),
                    default=1,
-                   help="0=all-at-once, 1=small-to-large, "
-                        "2=approximate-then-verify, 3=LateBB (2 and 3 run "
-                        "the exact all-at-once path of 0; see "
+                   help="0=all-at-once, 1=small-to-large (always "
+                        "minimal), 2=approximate-then-verify, 3=LateBB "
+                        "(all run the exact all-at-once path of 0; see "
                         "rdfind_spark.plans)")
     p.add_argument("--use-ar", action="store_true")
     p.add_argument("--no-minimal", action="store_true")

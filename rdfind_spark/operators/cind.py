@@ -18,13 +18,12 @@ per-capture count, and the join_value self-join; frequency pruning runs
 reference fights the same blow-up with Bloom filters + custom
 rebalancing, ``programs/RDFind.scala:404-444``).  Hub join lines go
 through the one hot-line kernel below (``hot_line_census``,
-``hot_line_masks``, ``hot_line_overlap``, ``cold_line_join``), which the
-staged engine shares.  Discovery enumerates pairs in one place,
-``_grouped_pair_counts``: each join line becomes a sorted capture array
-that emits its pairs through codegen'd generators, and a line wider
-than HOT_LINE_K is cut into position blocks whose block pairs are
-spread over tasks (the reference's join-line rebalancing in array
-form).
+``hot_line_masks``, ``hot_line_overlap``).  Discovery enumerates pairs
+in one place, ``_grouped_pair_counts``: each join line becomes a sorted
+capture array that emits its pairs through codegen'd generators, and a
+line wider than HOT_LINE_K is cut into position blocks whose block
+pairs are spread over tasks (the reference's join-line rebalancing in
+array form).  Every traversal strategy id runs ``discover_cinds``.
 """
 
 from __future__ import annotations
@@ -43,8 +42,8 @@ from rdfind_spark.util import materialize, release
 
 CAPTURE_KEY = ["code", "v1", "v2"]
 
-# A join line with more than HOT_LINE_K frequent captures is hot.  Both
-# engines cut a wide line into HOT_LINE_K-wide position blocks
+# A join line with more than HOT_LINE_K frequent captures is hot.  The
+# pair enumerator cuts a wide line into HOT_LINE_K-wide position blocks
 # (_block_cells), so no task emits more than HOT_LINE_K² ≈ 260k pairs
 # from one cell — roughly the point where one task's share of the
 # product outweighs the cost of replicating the line's blocks.
@@ -56,8 +55,8 @@ HOT_LINE_K = 512
 # thousands of hot lines) would mean hundreds of mask columns and an
 # unbounded collect.  Beyond the cap, only the MAX_HOT_MASK *hottest*
 # lines get masks; the overflow lines stay exact through the position
-# block split of the pair enumerator and of the verify join (graceful
-# degradation, no driver blow-up).
+# block split of the pair enumerator (graceful degradation, no driver
+# blow-up).
 MAX_HOT_MASK = 4096
 
 JV = ["jv1", "jv2"]
@@ -118,15 +117,15 @@ def assert_hash_injective(cand: DataFrame) -> None:
         )
 
 
-# ---- the hot-line kernel: the one hub-line mechanism of both CIND
-# engines (the reference's join-line rebalancing,
+# ---- the hot-line kernel: the one hub-line mechanism of the CIND
+# engine (the reference's join-line rebalancing,
 # ``operators/AssignJoinLineRebalancing.scala:15-65``).  A join line is
 # hot when more than HOT_LINE_K frequent captures share it.  The
 # MAX_HOT_MASK hottest hot lines are named on the driver and encoded as
 # per-capture 64-bit membership masks, so a pair's hot-line overlap is
 # a popcount instead of a k² join; hot lines past the cap (the
 # overflow) are never collected and stay exact as cold lines, cut into
-# position blocks by the pair enumerator and the verify join alike.
+# position blocks by the pair enumerator.
 
 
 def hot_line_census(capf: DataFrame) -> tuple[list, DataFrame | None]:
@@ -224,61 +223,10 @@ def hot_line_overlap(a: str, b: str, hot_values: list) -> Column:
     )
 
 
-def line_product_is_safe(n_a: int, n_b: int) -> bool:
-    """The verify hub gate: a join between ``n_a`` distinct captures on
-    one side and ``n_b`` on the other pairs at most ``n_a × n_b`` rows
-    on any line, so when that stays within HOT_LINE_K² no line can melt
-    a task and the plain join is safe."""
-    return n_a * n_b <= HOT_LINE_K * HOT_LINE_K
-
-
-def cold_line_join(
-    a: DataFrame,
-    b: DataFrame,
-    hot_values: list,
-    overflow: DataFrame | None,
-) -> DataFrame:
-    """Bipartite pairs of two ``(jv1, jv2, h1, h2)`` capture-instance
-    sides over cold lines only: one ``(a_h1, a_h2, b_h1, b_h2)`` row per
-    a-capture × b-capture sharing a line, per line.  The masked
-    ``hot_values`` lines are left out (their share is
-    ``hot_line_overlap``); the ``overflow`` lines are grouped into one
-    sorted capture array per side and emitted through the position
-    blocks of ``_block_cells``, so no task emits more than HOT_LINE_K²
-    pairs of one line.  Every other line is one plain equi-join.
-    Per-line rows add, so the union of the two streams is exact."""
-    hot = F.broadcast(_hot_keys(a, hot_values))
-    a = a.select(*JV, "h1", "h2").join(hot, on=JV, how="left_anti")
-    b = b.select(*JV, "h1", "h2").join(hot, on=JV, how="left_anti")
-
-    def side(df: DataFrame, s: str) -> DataFrame:
-        return df.select(*JV, F.col("h1").alias(f"{s}_h1"), F.col("h2").alias(f"{s}_h2"))
-
-    def plain(x: DataFrame, y: DataFrame) -> DataFrame:
-        return side(x, "a").join(side(y, "b"), on=JV).select(*PKEY)
-
-    if overflow is None:
-        return plain(a, b)
-    ovf = F.broadcast(overflow.select(*JV))
-    narrow = plain(
-        a.join(ovf, on=JV, how="left_anti"), b.join(ovf, on=JV, how="left_anti")
-    )
-    n_pair = _pair_parallelism(a)
-
-    def arrays(df: DataFrame, name: str) -> DataFrame:
-        wide = df.join(ovf, on=JV, how="left_semi")
-        return _line_arrays(wide, n_pair).withColumnRenamed("caps", name)
-
-    lines = arrays(a, "left").join(arrays(b, "right"), on=JV)
-    return narrow.unionByName(_cell_pairs(_block_cells(lines, n_pair, "left", "right")))
-
-
 def capture_overlaps(
     capf: DataFrame,
     frequent: DataFrame,
     min_overlap: int = 1,
-    hot_values: list | None = None,
-    hot_overflow: DataFrame | None = None,
 ) -> DataFrame:
     """Unordered pairwise overlap counts: for captures a < b (by key
     order), the number of join values where both occur.  Overlap is
@@ -325,16 +273,8 @@ def capture_overlaps(
       The lines the census found wide (mask-cap overflow lines, hot
       lines of a large deep class) are cut into position blocks there,
       so no task emits more than HOT_LINE_K² pairs of one line.
-
-    ``hot_values``/``hot_overflow``: a caller that already censused a
-    SUPERSET of this input's hot lines (the staged engine's shared
-    full-line census) passes it here to skip the census job — safe
-    because the decomposition is exact for any hot set: lines named hot
-    are mask-counted, everything else (overflow lines included) is
-    enumerated as cold, the overflow lines block-split.
     """
-    if hot_values is None:
-        hot_values, hot_overflow = hot_line_census(capf)
+    hot_values, hot_overflow = hot_line_census(capf)
     if hot_values:
         ov = _cold_pair_counts_with_hot_masks(
             capf, hot_values, min_overlap, overflow=hot_overflow
@@ -463,34 +403,25 @@ def _line_arrays(rows: DataFrame, n_pair: int) -> DataFrame:
     )
 
 
-def _block_cells(lines: DataFrame, n_pair: int, left: str, right: str) -> DataFrame:
-    """The ``(left, right, diag)`` cells of the sorted capture arrays in
-    columns ``left`` and ``right`` of ``lines`` (one row per join line):
-    the reference's join-line rebalancing (``AssignJoinLineRebalancing.
-    scala:15-65``) in array form.  Each array is cut into
-    HOT_LINE_K-wide position blocks, and each cell (block p of ``left``,
-    block q of ``right``) is repartitioned on (line, p, q), so no task
-    emits more than HOT_LINE_K² pairs of one cell.  When ``left`` and
-    ``right`` name the same array the cells are its self pairs p <= q,
-    diagonal when p = q; otherwise every left-block × right-block
-    cell, none diagonal."""
-    same = left == right
-    arrays = [left] if same else [left, right]
+def _block_cells(lines: DataFrame, n_pair: int) -> DataFrame:
+    """The ``(left, right, diag)`` cells of the sorted capture array
+    ``caps`` of ``lines`` (one row per join line): the reference's
+    join-line rebalancing (``AssignJoinLineRebalancing.scala:15-65``) in
+    array form.  The array is cut into HOT_LINE_K-wide position blocks,
+    and each cell (block p × block q, p <= q, diagonal when p = q) is
+    repartitioned on (line, p, q), so no task emits more than
+    HOT_LINE_K² pairs of one cell."""
+    last = F.expr(f"(size(caps) - 1) div {HOT_LINE_K}")
 
-    def last(c: str) -> Column:
-        return F.expr(f"(size({c}) - 1) div {HOT_LINE_K}")
+    def block(i: str) -> Column:
+        return F.slice("caps", F.col(i) * HOT_LINE_K + 1, F.lit(HOT_LINE_K))
 
-    def block(c: str, i: str) -> Column:
-        return F.slice(c, F.col(i) * HOT_LINE_K + 1, F.lit(HOT_LINE_K))
-
-    first_q = F.col("p") if same else F.lit(0)
-    diag = F.col("p") == F.col("q") if same else F.lit(False)
     return (
-        lines.select(*JV, *arrays, F.explode(F.sequence(F.lit(0), last(left))).alias("p"))
-        .select(*JV, *arrays, "p", F.explode(F.sequence(first_q, last(right))).alias("q"))
-        .select(*JV, "p", "q", block(left, "p").alias("left"), block(right, "q").alias("right"))
+        lines.select(*JV, "caps", F.explode(F.sequence(F.lit(0), last)).alias("p"))
+        .select(*JV, "caps", "p", F.explode(F.sequence(F.col("p"), last)).alias("q"))
+        .select(*JV, "p", "q", block("p").alias("left"), block("q").alias("right"))
         .repartition(n_pair, *JV, "p", "q")
-        .select("left", "right", diag.alias("diag"))
+        .select("left", "right", (F.col("p") == F.col("q")).alias("diag"))
     )
 
 
@@ -537,7 +468,7 @@ def _grouped_pair_counts(
     )
     pairs = _cell_pairs(narrow)
     if wide is not None:
-        pairs = pairs.unionByName(_cell_pairs(_block_cells(blocked, n_pair, "caps", "caps")))
+        pairs = pairs.unionByName(_cell_pairs(_block_cells(blocked, n_pair)))
     # Pair counting WITHOUT map-side partial aggregation.  Pair keys
     # repeat (emissions : distinct pairs, perfbench inputs: TPC-H star
     # over the full capf 1,061,823 : 45,940, 23:1; zipf_hubs cold lines
@@ -903,16 +834,19 @@ def discover_cinds(
     freq_h.unpersist()
     frequent.unpersist()
     cinds = extract_cinds(cands)
+    rules = None
     if ar_filter:
         from rdfind_spark.operators.rules import (
             association_rules,
             filter_ar_implied_cinds,
         )
 
-        cinds = filter_ar_implied_cinds(
-            cinds, association_rules(triples, min_support, 1.0)
-        )
-    # either result is checkpointed, so the overlap table is dead
+        rules = association_rules(triples, min_support, 1.0)
+        cinds = filter_ar_implied_cinds(cinds, rules)
+    # either result is checkpointed, so the overlap table and the
+    # materialized rule table are dead
     cinds = remove_implied_cinds(cinds) if minimal else materialize(cinds)
     cands.unpersist()
+    if rules is not None:
+        release(rules)
     return cinds

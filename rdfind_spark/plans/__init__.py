@@ -6,14 +6,17 @@ and subclasses), mapping each strategy id to its Spark implementation:
  id   reference class                 implementation here
 ====  ==============================  =========================================
  0    AllAtOnceTraversalStrategy      ``operators.cind.discover_cinds``
- 1    SmallToLargeTraversalStrategy   ``operators.staged.discover_cinds_staged``
+ 1    SmallToLargeTraversalStrategy   ``discover_cinds(minimal=True)``
  2    ApproximateAllAtOnce...         ``discover_cinds`` (as 0)
  3    LateBBTraversalStrategy         ``discover_cinds`` (as 0)
 ====  ==============================  =========================================
 
-Strategies 2 and 3, the reference's Bloom-prefilter-then-verify family,
-run the exact path of 0: pair emission is relational, so a prefilter
-cannot skip it (SURVEY §4).  They keep their ids and ``minimal=False``.
+Every strategy runs the exact path of 0: pair emission is relational,
+so neither a Bloom prefilter (2 and 3) nor a candidate lattice climbed
+in arity order (1) can skip it (SURVEY §4); the staged lattice measured
+slower than the one all-at-once plan on every input tried.  Strategies
+2 and 3 keep ``minimal=False``; strategy 1 always returns the minimal
+set, as the reference's does.
 
 All strategies return the identical exact CIND set (cross-checked by the
 driver oracle and the property tests in ``tests/test_cind_engine.py``).
@@ -26,7 +29,6 @@ import warnings
 from pyspark.sql import DataFrame
 
 from rdfind_spark.operators.cind import discover_cinds
-from rdfind_spark.operators.staged import discover_cinds_staged
 
 
 def traversal(
@@ -39,28 +41,22 @@ def traversal(
 ) -> DataFrame:
     """Dispatch like the reference's ``--traversal-strategy`` switch
     (``programs/RDFind.scala:50-56,652-653``; default 1)."""
-    if strategy in (0, 2, 3):
-        return discover_cinds(
-            triples,
-            min_support=min_support,
-            minimal=minimal,
-            ar_filter=ar_filter,
-            projection=projection,
+    if strategy not in (0, 1, 2, 3):
+        raise ValueError(f"unknown traversal strategy {strategy}")
+    if strategy == 1 and not minimal:
+        # The reference's small-to-large traversal prunes non-minimal
+        # CINDs as it climbs; it cannot emit the full set.
+        warnings.warn(
+            "traversal strategy 1 (small-to-large) always returns the "
+            "minimal CIND set; minimal=False is ignored — use strategy "
+            "0/2/3 for the full set",
+            stacklevel=2,
         )
-    if strategy == 1:
-        if not minimal:
-            # The staged lattice traversal prunes non-minimal CINDs as it
-            # climbs (that IS the strategy); it cannot emit the full set.
-            warnings.warn(
-                "traversal strategy 1 (small-to-large) always returns the "
-                "minimal CIND set; minimal=False is ignored — use strategy "
-                "0/2/3 for the full set",
-                stacklevel=2,
-            )
-        return discover_cinds_staged(
-            triples,
-            min_support=min_support,
-            ar_filter=ar_filter,
-            projection=projection,
-        )
-    raise ValueError(f"unknown traversal strategy {strategy}")
+        minimal = True
+    return discover_cinds(
+        triples,
+        min_support=min_support,
+        minimal=minimal,
+        ar_filter=ar_filter,
+        projection=projection,
+    )

@@ -78,12 +78,14 @@ def cind_minimal_ar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("cind_small_to_large", oracle.cind_sql(MIN_SUPPORT, minimal=True))
 def cind_small_to_large(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged SmallToLarge traversal (the reference's default strategy);
-    same oracle as cind_minimal — the driver's check doubles as the
-    cross-strategy agreement test (SURVEY §5)."""
-    from rdfind_spark.operators.staged import discover_cinds_staged
+    """SmallToLarge traversal (reference strategy 1, the default), run
+    the way the CLI runs it: through the strategy facade, which maps it
+    to the exact all-at-once path.  Same oracle as cind_minimal — the
+    driver's check doubles as the cross-strategy agreement test
+    (SURVEY §5)."""
+    from rdfind_spark.plans import traversal
 
-    return discover_cinds_staged(triple_view(spark, sf_dir), MIN_SUPPORT)
+    return traversal(triple_view(spark, sf_dir), strategy=1, min_support=MIN_SUPPORT)
 
 
 @register("cind_approx_verify", oracle.cind_sql(MIN_SUPPORT, minimal=True))

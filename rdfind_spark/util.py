@@ -82,9 +82,9 @@ def null_sensitive_cmp(a, b) -> int:
 
 def materialize(df, label: str = ""):
     """Cut lineage and pin ``df``'s current result — the engine's one
-    stage-materialization primitive (iterative loops, staged lattices,
-    reused hot-line mask tables all go through here).  Each staged-lattice
-    stage references earlier stages several times (self-joins,
+    stage-materialization primitive (iterative loops, the minimality
+    pass, reused hot-line mask tables all go through here).  Each loop
+    round or pass references earlier outputs several times (self-joins,
     probe/killer expansions); with a lazy persist the *logical plan*
     still nests exponentially and the driver runs out of memory just
     stringifying it for the SQL UI, so stage outputs are checkpointed.

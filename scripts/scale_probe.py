@@ -4,11 +4,9 @@ copies of the sf0.1 triple view, each copy value-prefixed so copies
 share no values (output must scale exactly ×N — checked).
 
 Usage: python scripts/scale_probe.py
-       [--staged|--dedup|--ann|--triangles|--cosine] [N ...]
+       [--dedup|--ann|--triangles|--cosine] [N ...]
 (default N: 1 2 4)
 
-``--staged`` probes the SmallToLarge staged lattice
-(``discover_cinds_staged``) instead of the all-at-once engine.
 ``--dedup`` probes the exact n-gram-Jaccard near-dup pipeline
 (inverted shingle index + candidate-restricted verification) on N×
 copies of the documents table, every TOKEN prefixed per copy so
@@ -54,7 +52,6 @@ def _session():
 
 def main() -> int:
     zipf = "--zipf" in sys.argv[1:]
-    staged = "--staged" in sys.argv[1:]
     dedup = "--dedup" in sys.argv[1:]
     ann = "--ann" in sys.argv[1:]
     triangles = "--triangles" in sys.argv[1:]
@@ -70,7 +67,7 @@ def main() -> int:
     args = [
         a
         for a in sys.argv[1:]
-        if a not in ("--staged", "--dedup", "--ann", "--triangles",
+        if a not in ("--dedup", "--ann", "--triangles",
                      "--cosine", "--spans", "--lmscore", "--prefix-jaccard",
                      "--kcore", "--funnel", "--minhash-est", "--containment",
                      "--half-base", "--zipf")
@@ -97,19 +94,11 @@ def main() -> int:
         return _ann_probe([int(a) for a in args] or [1, 2, 4])
     if dedup:
         return _dedup_probe([int(a) for a in args] or [1, 2, 4])
-    if staged:
-        from rdfind_spark.operators.staged import discover_cinds_staged
-
-        def discover(tri, support, minimal=True):  # noqa: ARG001
-            return discover_cinds_staged(tri, support)
-
-    else:
-        discover = discover_cinds
     ns = [int(a) for a in args] or [1, 2, 4]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _session()
     # warm codegen once, untimed
-    discover(
+    discover_cinds(
         triple_view(spark, "/root/testdata/sf0.001"), 10, minimal=True
     ).write.format("noop").mode("overwrite").save()
 
@@ -142,7 +131,7 @@ def main() -> int:
         ]
         tri = reduce(lambda a, b: a.unionByName(b), copies)
         t0 = time.time()
-        out = discover(tri, 10, minimal=True)
+        out = discover_cinds(tri, 10, minimal=True)
         rows = out.count()
         dt = time.time() - t0
         results[n] = (dt, rows)

@@ -15,9 +15,8 @@ Three modes over scripts/zipf_fixture.py fixtures:
   holds tens of thousands of frequent captures (sum of hot-line
   pair-products ~1e10 — a plain equi-join would put that on single
   tasks).  Reports the hot census (lines, mask words, overflow), times
-  the full minimal-CIND discovery, times the equal-row-count benign
-  uniform twin, and cross-checks all-at-once vs the staged engine
-  (strategy agreement = the repo's standard non-oracle depth check).
+  the full minimal-CIND discovery and times the equal-row-count benign
+  uniform twin.
 * ``--ablate``: mid-size fixture timed twice — masks on vs masks
   forced off (HOT_LINE_K patched high, so every line flows through the
   plain colocated pair join) — measuring what the decomposition buys.
@@ -156,8 +155,6 @@ def parity(tmp: str) -> int:
 
 
 def depth(tmp: str) -> int:
-    from rdfind_spark.operators.staged import discover_cinds_staged
-
     spark = _session()
     results = {}
     for label, uniform in (("zipf", False), ("uniform", True)):
@@ -171,18 +168,6 @@ def depth(tmp: str) -> int:
         print(f"# {label}: discover_cinds(minimal) {rows} rows in {dt:.1f}s", flush=True)
         spark.catalog.clearCache()
 
-    path = f"{tmp}/depth_zipf.parquet"
-    triples = spark.read.parquet(path)
-    t0 = time.time()
-    staged = discover_cinds_staged(triples, 10)
-    srows = {tuple(r[c] for c in CIND_COLS) for r in staged.collect()}
-    print(f"# staged engine: {len(srows)} rows in {time.time()-t0:.1f}s", flush=True)
-    _, _, aao = _timed_discover(triples)
-    arows = {tuple(r[c] for c in CIND_COLS) for r in aao.collect()}
-    if srows != arows:
-        print(f"STRATEGY MISMATCH: aao={len(arows)} staged={len(srows)}")
-        return 1
-    print("# strategy agreement OK (all-at-once == staged) under depth skew", flush=True)
     zd, zr, zc = results["zipf"]
     ud, ur, _ = results["uniform"]
     print(

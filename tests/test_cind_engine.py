@@ -293,19 +293,12 @@ def test_hot_line_overflow_cap_matches_brute_force(spark, monkeypatch):
 
 
 def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch):
-    """The two pair emitters of the block split on their own, with
+    """The block split of the pair enumerator on its own, with
     HOT_LINE_K = 3: lines of widths 1-10 hit the narrow path, exact
-    block edges (3, 6) and partial last blocks (4, 7, 10).
-
-    ``_grouped_pair_counts``: counts equal a brute-force census of
-    every line's pairs, one row per unordered pair, each row (h1,
-    h2)-lex oriented — with the wide lines named as the census names
-    them, and equally with none or every line named.
-
-    ``cold_line_join``: against a second side of other widths on the
-    same lines, the rows are every a × b pair of each line except the
-    masked one, once per line — with the wide lines as overflow, and
-    equally with none or every line as overflow."""
+    block edges (3, 6) and partial last blocks (4, 7, 10).  Counts equal
+    a brute-force census of every line's pairs, one row per unordered
+    pair, each row (h1, h2)-lex oriented — with the wide lines named as
+    the census names them, and equally with none or every line named."""
     from collections import Counter
 
     from rdfind_spark.operators import cind as cind_mod
@@ -313,20 +306,13 @@ def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 3)
     rng = random.Random(5)
     pool = sorted({(rng.randrange(-50, 50), rng.randrange(-3, 3)) for _ in range(14)})
-    rows, b_rows = [], []
-    expected, bipartite = Counter(), Counter()
-    masked = (3, -3)
-    for line, (width, b_width) in enumerate(
-        zip((1, 2, 3, 4, 6, 7, 10, 10, 7), (3, 6, 1, 5, 6, 2, 9, 3, 10))
-    ):
-        caps, b_caps = rng.sample(pool, width), rng.sample(pool, b_width)
+    rows = []
+    expected = Counter()
+    for line, width in enumerate((1, 2, 3, 4, 6, 7, 10, 10, 7)):
+        caps = rng.sample(pool, width)
         rows += [(line, -line, h1, h2) for h1, h2 in caps]
-        b_rows += [(line, -line, h1, h2) for h1, h2 in b_caps]
         expected.update(itertools.combinations(sorted(caps), 2))
-        if (line, -line) != masked:
-            bipartite.update(itertools.product(caps, b_caps))
-    schema = "jv1 long, jv2 int, h1 long, h2 int"
-    capf = spark.createDataFrame(rows, schema)
+    capf = spark.createDataFrame(rows, "jv1 long, jv2 int, h1 long, h2 int")
     widths = capf.groupBy("jv1", "jv2").count()
     census = widths.filter("count > 3")
     assert census.count() == 6
@@ -340,19 +326,6 @@ def test_grouped_pair_counts_block_split_matches_combinations(spark, monkeypatch
     assert {((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)): r.overlap for r in floor} == {
         k: n for k, n in expected.items() if n >= 3
     }
-    b = spark.createDataFrame(b_rows, schema)
-    b_census = (
-        widths.unionByName(b.groupBy("jv1", "jv2").count())
-        .filter("count > 3")
-        .select("jv1", "jv2")
-        .distinct()
-    )
-    assert b_census.count() == 7
-    for overflow in (b_census, None, widths):
-        got = cind_mod.cold_line_join(capf, b, [masked], overflow).collect()
-        assert Counter(
-            ((r.a_h1, r.a_h2), (r.b_h1, r.b_h2)) for r in got
-        ) == bipartite
 
 
 def test_hot_index_runs_no_python_worker(spark):
@@ -374,14 +347,13 @@ def test_hot_index_runs_no_python_worker(spark):
 
 
 def test_engine_jobs_stay_on_callers_thread(spark, monkeypatch):
-    """Both engines submit every Spark job from the caller's thread, so
+    """The engine submits every Spark job from the caller's thread, so
     each job carries the caller's local properties: a job group set
     around a discovery covers all of its jobs, and no job lands outside
-    a group.  The fixture is the staged overflow test's (HOT_LINE_K=2,
-    MAX_HOT_MASK=4): census, masks, overflow, the deep class and the
-    non-plain verify all run."""
+    a group.  The fixture is the overflow test's (HOT_LINE_K=2,
+    MAX_HOT_MASK=4): census, masks, overflow and the deep class all
+    run."""
     from rdfind_spark.operators import cind as cind_mod
-    from rdfind_spark.operators.staged import discover_cinds_staged
 
     monkeypatch.setattr(cind_mod, "HOT_LINE_K", 2)
     monkeypatch.setattr(cind_mod, "MAX_HOT_MASK", 4)
@@ -399,18 +371,17 @@ def test_engine_jobs_stay_on_callers_thread(spark, monkeypatch):
     df = spark.createDataFrame(triples, ["subj", "pred", "obj"])
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for discover in (discover_cinds, discover_cinds_staged):
-        group = f"caller-thread-{discover.__name__}"
-        ungrouped = set(tracker.getJobIdsForGroup(None))
-        sc.setJobGroup(group, "discovery on the caller's thread")
-        try:
-            assert discover(df, min_support=3).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
-        assert tracker.getJobIdsForGroup(group)
-        assert not escaped, f"{discover.__name__}: jobs {sorted(escaped)} ran without the group"
+    group = "caller-thread-discovery"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "discovery on the caller's thread")
+    try:
+        assert discover_cinds(df, min_support=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert tracker.getJobIdsForGroup(group)
+    assert not escaped, f"jobs {sorted(escaped)} ran without the group"
 
 
 def test_duplicate_triples_do_not_change_result(spark):

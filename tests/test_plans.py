@@ -76,11 +76,12 @@ def test_pair_stage_groups_lines_no_self_join(spark, sf_dir):
 
 
 def test_traversal_dispatch(spark):
-    """Strategies 2 and 3 (the reference's approximate family,
+    """Every strategy runs the exact all-at-once path of strategy 0 —
+    1 (small-to-large) with minimality always on, 2 and 3 (the
+    reference's approximate family,
     plan/ApproximateAllAtOnceTraversalStrategy.scala and
-    plan/LateBBTraversalStrategy.scala — NOT small-to-large) run the
-    exact all-at-once path like strategy 0, and every strategy must
-    agree on the tiny fixture."""
+    plan/LateBBTraversalStrategy.scala) as given — and every strategy
+    must agree on the tiny fixture."""
     import warnings
 
     from rdfind_spark.plans import traversal
@@ -93,11 +94,12 @@ def test_traversal_dispatch(spark):
     }
     assert results[0], "fixture must produce CINDs"
     assert results[3] == results[2] == results[1] == results[0]
-    # minimal=False is meaningless for the staged strategy → warn loudly
+    # strategy 1 always returns the minimal set → minimal=False warns loudly
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        traversal(df, strategy=1, min_support=2, minimal=False)
+        forced = traversal(df, strategy=1, min_support=2, minimal=False)
         assert any("minimal" in str(w.message) for w in caught)
+    assert {tuple(r) for r in forced.collect()} == results[1]
     # but strategy 3 honors it (the all-at-once path emits the full set)
     full = {
         tuple(r)

@@ -8,8 +8,8 @@ The fixture (scripts/zipf_fixture.py PARITY params) measures at
 generation time: 16 hot join lines (top width 3,565 frequent
 captures), 50 deep captures (captures in >= min_support distinct hot
 lines), 18.9M hot pair-product that the plain equi-join would
-materialize.  Larger regimes (3.4M triples, 15.0B avoided product,
-staged-strategy agreement) are scripted in
+materialize.  Larger regimes (3.4M triples, 15.0B avoided product)
+are scripted in
 scripts/zipf_cind_probe.py --depth and recorded in README."""
 
 from __future__ import annotations
